@@ -2,10 +2,11 @@
 extraction — the access path a 100 TB LLM-pretraining corpus actually
 arrives through (Common Crawl ships WARC; its payloads are HTML).
 
-Both stages are Arrow-batched mapInPandas chains over opaque binary /
-string columns, map-only end to end: at cluster scale they ride the
-scan partitioning (one pass, no shuffle) and feed straight into the
-existing quality / dedup / curation operators.
+Every stage is a plain per-row function on the transform.py row
+boundary (`map_rows`; fixture planters use `plant_rows`), over opaque
+binary / string columns, map-only end to end: at cluster scale they
+ride the scan partitioning (one pass, no shuffle) and feed straight
+into the existing quality / dedup / curation operators.
 
 Format knowledge is public-spec only:
 - WARC/1.0–1.1 (ISO 28500): version line, named headers, the
@@ -33,12 +34,10 @@ from __future__ import annotations
 import hashlib
 import re
 import zlib
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 
-from sparkga1_spark.operators.multimodal import _decode_map, _planted
+from sparkga1_spark.operators.transform import map_rows, plant_rows
 
 __all__ = [
     "build_warc",
@@ -298,74 +297,54 @@ def parse_warc_records(df: DataFrame, *, payload_col: str = "payload") -> DataFr
     URI, HTTP status (responses), payload byte length, and whether the
     source was gzip-per-record. Map-only Arrow stage."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf[payload_col]):
-                for i, rec in enumerate(parse_warc(bytes(payload))):
-                    out.append(
-                        (
-                            doc_id,
-                            i,
-                            rec["rec_type"],
-                            rec["target_uri"],
-                            rec["http_status"],
-                            len(rec["payload"]),
-                            rec["compressed"],
-                        )
-                    )
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "doc_id", "rec_index", "rec_type", "target_uri",
-                    "http_status", "payload_len", "compressed",
-                ],
+    def rows(doc_id, payload):
+        for i, rec in enumerate(parse_warc(bytes(payload))):
+            yield (
+                doc_id,
+                i,
+                rec["rec_type"],
+                rec["target_uri"],
+                rec["http_status"],
+                len(rec["payload"]),
+                rec["compressed"],
             )
 
-    return _decode_map(df, run, WARC_RECORD_SCHEMA)
+    return map_rows(df, rows, cols=["doc_id", payload_col], schema=WARC_RECORD_SCHEMA)
 
 
 def warc_response_payloads(df: DataFrame, *, payload_col: str = "payload") -> DataFrame:
     """binary WARC → (doc_id, target_uri, http_status, body) for the
     HTTP 200 response records only — the crawl→curation handoff."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf[payload_col]):
-                for rec in parse_warc(bytes(payload)):
-                    if rec["rec_type"] == "response" and rec["http_status"] == 200:
-                        out.append(
-                            (doc_id, rec["target_uri"], rec["http_status"],
-                             rec["payload"])
-                        )
-            yield pd.DataFrame(
-                out, columns=["doc_id", "target_uri", "http_status", "body"]
-            )
+    def rows(doc_id, payload):
+        for rec in parse_warc(bytes(payload)):
+            if rec["rec_type"] == "response" and rec["http_status"] == 200:
+                yield (doc_id, rec["target_uri"], rec["http_status"],
+                       rec["payload"])
 
-    return _decode_map(df, run, "doc_id long, target_uri string, http_status int, body binary")
+    return map_rows(
+        df, rows, cols=["doc_id", payload_col],
+        schema="doc_id long, target_uri string, http_status int, body binary",
+    )
 
 
 def plant_warc_payloads(df: DataFrame, *, html_bodies: bool = False) -> DataFrame:
     """(doc_id, text, source) → (doc_id, payload): one WARC file per
     document — odd ids written gzip-per-record. html_bodies swaps the
     plain-text response bodies for real HTML pages (build_html)."""
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id, text, source in zip(pdf["doc_id"], pdf["text"], pdf["source"]):
-                d = int(doc_id)
-                body = build_html(d, text or "").encode() if html_bodies else None
-                out.append(
-                    (
-                        doc_id,
-                        build_warc(d, source, text or "",
-                                   gzip_members=d % 2 == 1, html_body=body),
-                    )
-                )
-            yield pd.DataFrame(out, columns=["doc_id", "payload"])
+    def rows(doc_id, text, source):
+        d = int(doc_id)
+        body = build_html(d, text or "").encode() if html_bodies else None
+        yield (
+            doc_id,
+            build_warc(d, source, text or "",
+                       gzip_members=d % 2 == 1, html_body=body),
+        )
 
-    return _planted(df, run, "doc_id long, payload binary")
+    return plant_rows(
+        df, rows, cols=["doc_id", "text", "source"],
+        schema="doc_id long, payload binary",
+    )
 
 
 # --------------------------------------------------------------------------
@@ -590,31 +569,22 @@ HTML_EXTRACT_SCHEMA = (
 def extract_html_text(df: DataFrame, *, html_col: str = "html") -> DataFrame:
     """(doc_id, html string) → extraction row per page. Map-only."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id, html in zip(pdf["doc_id"], pdf[html_col]):
-                title, text, links, dropped = extract_html(html or "")
-                out.append((doc_id, title, text, links, dropped))
-            yield pd.DataFrame(
-                out,
-                columns=["doc_id", "title", "main_text", "n_links", "n_dropped"],
-            )
+    def rows(doc_id, html):
+        title, text, links, dropped = extract_html(html or "")
+        yield (doc_id, title, text, links, dropped)
 
-    return _decode_map(df, run, HTML_EXTRACT_SCHEMA)
+    return map_rows(df, rows, cols=["doc_id", html_col], schema=HTML_EXTRACT_SCHEMA)
 
 
 def plant_html_payloads(df: DataFrame, *, text_col: str = "text") -> DataFrame:
     """(doc_id, text) → (doc_id, html): the fixture page builder as a
     Spark stage."""
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id, text in zip(pdf["doc_id"], pdf[text_col]):
-                out.append((doc_id, build_html(int(doc_id), text or "")))
-            yield pd.DataFrame(out, columns=["doc_id", "html"])
+    def rows(doc_id, text):
+        yield (doc_id, build_html(int(doc_id), text or ""))
 
-    return _planted(df, run, "doc_id long, html string")
+    return plant_rows(
+        df, rows, cols=["doc_id", text_col], schema="doc_id long, html string"
+    )
 
 
 # --------------------------------------------------------------------------
@@ -737,18 +707,13 @@ def robots_gate(df: DataFrame, *, robots_col: str = "robots_txt",
                 user_agent: str = "sparkga1-crawler") -> DataFrame:
     """(doc_id, robots_txt, path) → + allowed boolean. Map-only."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id, robots, path in zip(
-                pdf["doc_id"], pdf[robots_col], pdf[path_col]
-            ):
-                out.append(
-                    (doc_id, path, robots_allowed(robots or "", user_agent, path))
-                )
-            yield pd.DataFrame(out, columns=["doc_id", "path", "allowed"])
+    def rows(doc_id, robots, path):
+        yield (doc_id, path, robots_allowed(robots or "", user_agent, path))
 
-    return _decode_map(df, run, "doc_id long, path string, allowed boolean")
+    return map_rows(
+        df, rows, cols=["doc_id", robots_col, path_col],
+        schema="doc_id long, path string, allowed boolean",
+    )
 
 
 # --------------------------------------------------------------------------
@@ -789,19 +754,14 @@ def transcode_http_bodies(df: DataFrame, *, body_col: str = "body",
     """(doc_id, body binary, content_type) → decoded text + the charset
     actually used + whether it was declared. Map-only."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id, body, ctype in zip(
-                pdf["doc_id"], pdf[body_col], pdf[ctype_col]
-            ):
-                text, cs, declared = decode_http_body(bytes(body), ctype)
-                out.append((doc_id, cs, declared, text))
-            yield pd.DataFrame(
-                out, columns=["doc_id", "charset", "declared", "text_out"]
-            )
+    def rows(doc_id, body, ctype):
+        text, cs, declared = decode_http_body(bytes(body), ctype)
+        yield (doc_id, cs, declared, text)
 
-    return _decode_map(df, run, "doc_id long, charset string, declared boolean, text_out string")
+    return map_rows(
+        df, rows, cols=["doc_id", body_col, ctype_col],
+        schema="doc_id long, charset string, declared boolean, text_out string",
+    )
 
 
 def plant_robots_fixture(df: DataFrame) -> DataFrame:
@@ -810,34 +770,32 @@ def plant_robots_fixture(df: DataFrame) -> DataFrame:
     an id%4-dependent extra rule, and a deny-all fallback group) and
     four candidate paths per document covering allow, prefix-deny,
     anchored-deny, and the policy-dependent case."""
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                extra = "Disallow: /public/\n" if d % 4 == 0 else ""
-                robots = (
-                    "# corpus crawl policy\n"
-                    "User-agent: sparkga1-crawler\n"
-                    "Disallow: /private/\n"
-                    "Allow: /private/ok/\n"
-                    "Disallow: /*.pdf$\n"
-                    f"{extra}"
-                    "Allow: /doc/\n\n"
-                    "User-agent: *\n"
-                    "Disallow: /\n"
-                )
-                for path in (
-                    f"/doc/{d}/0",
-                    f"/private/{d}",
-                    f"/doc/{d}.pdf",
-                    f"/public/{d % 7}",
-                    f"/private/ok/{d}",
-                ):
-                    out.append((doc_id, robots, path))
-            yield pd.DataFrame(out, columns=["doc_id", "robots_txt", "path"])
+    def rows(doc_id):
+        d = int(doc_id)
+        extra = "Disallow: /public/\n" if d % 4 == 0 else ""
+        robots = (
+            "# corpus crawl policy\n"
+            "User-agent: sparkga1-crawler\n"
+            "Disallow: /private/\n"
+            "Allow: /private/ok/\n"
+            "Disallow: /*.pdf$\n"
+            f"{extra}"
+            "Allow: /doc/\n\n"
+            "User-agent: *\n"
+            "Disallow: /\n"
+        )
+        for path in (
+            f"/doc/{d}/0",
+            f"/private/{d}",
+            f"/doc/{d}.pdf",
+            f"/public/{d % 7}",
+            f"/private/ok/{d}",
+        ):
+            yield (doc_id, robots, path)
 
-    return _planted(df, run, "doc_id long, robots_txt string, path string")
+    return plant_rows(
+        df, rows, cols=["doc_id"], schema="doc_id long, robots_txt string, path string"
+    )
 
 
 def plant_encoded_bodies(df: DataFrame, *, text_col: str = "text") -> DataFrame:
@@ -847,25 +805,24 @@ def plant_encoded_bodies(df: DataFrame, *, text_col: str = "text") -> DataFrame:
     utf-16le. The latin-1 slice declares its charset only on even ids
     — odd ones exercise the sniff path (their accented bytes are
     invalid UTF-8, so the fallback is deterministic)."""
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id, text in zip(pdf["doc_id"], pdf[text_col]):
-                d = int(doc_id)
-                s = "".join(
-                    chr(0xE0 + ord(c) % 16) if i % 17 == 5 else c
-                    for i, c in enumerate(text or "")
-                )
-                cs = ("utf-8", "latin-1", "utf-16le")[d % 3]
-                body = s.encode(cs)
-                if d % 3 == 1 and d % 2 == 1:
-                    ctype = "text/html"  # undeclared: the sniff path
-                else:
-                    ctype = f"text/html; charset={cs}"
-                out.append((doc_id, body, ctype))
-            yield pd.DataFrame(out, columns=["doc_id", "body", "content_type"])
+    def rows(doc_id, text):
+        d = int(doc_id)
+        s = "".join(
+            chr(0xE0 + ord(c) % 16) if i % 17 == 5 else c
+            for i, c in enumerate(text or "")
+        )
+        cs = ("utf-8", "latin-1", "utf-16le")[d % 3]
+        body = s.encode(cs)
+        if d % 3 == 1 and d % 2 == 1:
+            ctype = "text/html"  # undeclared: the sniff path
+        else:
+            ctype = f"text/html; charset={cs}"
+        yield (doc_id, body, ctype)
 
-    return _planted(df, run, "doc_id long, body binary, content_type string")
+    return plant_rows(
+        df, rows, cols=["doc_id", text_col],
+        schema="doc_id long, body binary, content_type string",
+    )
 
 
 # --------------------------------------------------------------------------
@@ -947,44 +904,34 @@ def html_link_edges(df: DataFrame, *, html_col: str = "html",
     resolved URL and its host — the frontier/link-graph feed.
     Map-only."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id, html, base in zip(
-                pdf["doc_id"], pdf[html_col], pdf[base_col]
-            ):
-                for rank, href in enumerate(extract_links(html or "")):
-                    url = resolve_url(base or "", href)
-                    host = url.split("://", 1)[-1].split("/", 1)[0]
-                    out.append((doc_id, rank, url, host))
-            yield pd.DataFrame(
-                out, columns=["doc_id", "link_rank", "url", "dst_host"]
-            )
+    def rows(doc_id, html, base):
+        for rank, href in enumerate(extract_links(html or "")):
+            url = resolve_url(base or "", href)
+            host = url.split("://", 1)[-1].split("/", 1)[0]
+            yield (doc_id, rank, url, host)
 
-    return _decode_map(df, run, "doc_id long, link_rank int, url string, dst_host string")
+    return map_rows(
+        df, rows, cols=["doc_id", html_col, base_col],
+        schema="doc_id long, link_rank int, url string, dst_host string",
+    )
 
 
 def plant_pages_with_base(df: DataFrame) -> DataFrame:
     """(doc_id, text, source) → (doc_id, html, base_url) in ONE Arrow
     stage — the link-graph feed without a self-join back to the
     documents table."""
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id, text, source in zip(
-                pdf["doc_id"], pdf["text"], pdf["source"]
-            ):
-                d = int(doc_id)
-                out.append(
-                    (
-                        doc_id,
-                        build_html(d, text or ""),
-                        f"https://{source}.example.com/doc/{d}/0",
-                    )
-                )
-            yield pd.DataFrame(out, columns=["doc_id", "html", "base_url"])
+    def rows(doc_id, text, source):
+        d = int(doc_id)
+        yield (
+            doc_id,
+            build_html(d, text or ""),
+            f"https://{source}.example.com/doc/{d}/0",
+        )
 
-    return _planted(df, run, "doc_id long, html string, base_url string")
+    return plant_rows(
+        df, rows, cols=["doc_id", "text", "source"],
+        schema="doc_id long, html string, base_url string",
+    )
 
 
 # --------------------------------------------------------------------------
@@ -1032,17 +979,14 @@ def extract_page_meta(html: str):
 def extract_page_meta_stage(df: DataFrame, *, html_col: str = "html") -> DataFrame:
     """(doc_id, html) → one metadata row per page. Map-only."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id, html in zip(pdf["doc_id"], pdf[html_col]):
-                og, desc, canon = extract_page_meta(html or "")
-                out.append((doc_id, og, desc, canon))
-            yield pd.DataFrame(
-                out, columns=["doc_id", "og_title", "description", "canonical"]
-            )
+    def rows(doc_id, html):
+        og, desc, canon = extract_page_meta(html or "")
+        yield (doc_id, og, desc, canon)
 
-    return _decode_map(df, run, "doc_id long, og_title string, description string, canonical string")
+    return map_rows(
+        df, rows, cols=["doc_id", html_col],
+        schema="doc_id long, og_title string, description string, canonical string",
+    )
 
 
 def extract_main_text_stage(df: DataFrame, *, html_col: str = "html",
@@ -1051,20 +995,15 @@ def extract_main_text_stage(df: DataFrame, *, html_col: str = "html",
     the main-text extraction Arrow stage the pipeline queries share
     (review finding: the identical closure was hand-copied into two
     queries)."""
-    cols = ["doc_id", *keep_cols]
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for row in zip(*(pdf[c] for c in cols), pdf[html_col]):
-                *keep, html = row
-                _, text, _, _ = extract_html(html or "")
-                out.append((*keep, text))
-            yield pd.DataFrame(out, columns=[*cols, "main_text"])
+    def rows(*row):
+        *keep, html = row
+        _, text, _, _ = extract_html(html or "")
+        yield (*keep, text)
 
     schema = "doc_id long, " + ", ".join(f"{c} string" for c in keep_cols) + \
         ", main_text string"
-    return _decode_map(df, run, schema)
+    return map_rows(df, rows, cols=["doc_id", *keep_cols, html_col], schema=schema)
 
 
 # --------------------------------------------------------------------------
@@ -1215,34 +1154,27 @@ def parse_sitemaps_stage(df: DataFrame, *, xml_col: str = "xml") -> DataFrame:
     """(doc_id, xml) → one row per sitemap entry (1→N): kind, rank,
     loc, lastmod, priority. Map-only."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id, xml in zip(pdf["doc_id"], pdf[xml_col]):
-                kind, entries = parse_sitemap(xml or "")
-                for rank, e in enumerate(entries):
-                    out.append(
-                        (doc_id, kind, rank, e.get("loc"), e.get("lastmod"),
-                         e.get("priority"))
-                    )
-            yield pd.DataFrame(
-                out,
-                columns=["doc_id", "kind", "rank", "loc", "lastmod", "priority"],
-            )
+    def rows(doc_id, xml):
+        kind, entries = parse_sitemap(xml or "")
+        for rank, e in enumerate(entries):
+            yield (doc_id, kind, rank, e.get("loc"), e.get("lastmod"),
+                   e.get("priority"))
 
-    return _decode_map(df, run, "doc_id long, kind string, rank int, loc string, " "lastmod string, priority string")
+    return map_rows(
+        df, rows, cols=["doc_id", xml_col],
+        schema="doc_id long, kind string, rank int, loc string, lastmod string, "
+        "priority string",
+    )
 
 
 def plant_sitemap_payloads(df: DataFrame) -> DataFrame:
     """(doc_id, source) → (doc_id, xml)."""
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id, source in zip(pdf["doc_id"], pdf["source"]):
-                out.append((doc_id, build_sitemap(int(doc_id), source)))
-            yield pd.DataFrame(out, columns=["doc_id", "xml"])
+    def rows(doc_id, source):
+        yield (doc_id, build_sitemap(int(doc_id), source))
 
-    return _planted(df, run, "doc_id long, xml string")
+    return plant_rows(
+        df, rows, cols=["doc_id", "source"], schema="doc_id long, xml string"
+    )
 
 
 # --------------------------------------------------------------------------
@@ -1312,24 +1244,15 @@ def image_pairs_stage(df: DataFrame, *, html_col: str = "html",
     """(doc_id, html, base_url) → one row per kept image (1→N).
     Map-only."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id, html, base in zip(
-                pdf["doc_id"], pdf[html_col], pdf[base_col]
-            ):
-                for rank, p in enumerate(extract_image_pairs(html or "",
-                                                             base or "")):
-                    out.append(
-                        (doc_id, rank, p["img_url"], p["alt_text"],
-                         p["caption"])
-                    )
-            yield pd.DataFrame(
-                out,
-                columns=["doc_id", "rank", "img_url", "alt_text", "caption"],
-            )
+    def rows(doc_id, html, base):
+        for rank, p in enumerate(extract_image_pairs(html or "", base or "")):
+            yield (doc_id, rank, p["img_url"], p["alt_text"], p["caption"])
 
-    return _decode_map(df, run, "doc_id long, rank int, img_url string, alt_text string, " "caption string")
+    return map_rows(
+        df, rows, cols=["doc_id", html_col, base_col],
+        schema="doc_id long, rank int, img_url string, alt_text string, "
+        "caption string",
+    )
 
 
 def build_gallery_html(doc_id: int, source: str) -> tuple[str, str]:
@@ -1357,12 +1280,11 @@ def build_gallery_html(doc_id: int, source: str) -> tuple[str, str]:
 
 def plant_gallery_pages(df: DataFrame) -> DataFrame:
     """(doc_id, source) → (doc_id, html, base_url)."""
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id, source in zip(pdf["doc_id"], pdf["source"]):
-                html, base = build_gallery_html(int(doc_id), source)
-                out.append((doc_id, html, base))
-            yield pd.DataFrame(out, columns=["doc_id", "html", "base_url"])
+    def rows(doc_id, source):
+        html, base = build_gallery_html(int(doc_id), source)
+        yield (doc_id, html, base)
 
-    return _planted(df, run, "doc_id long, html string, base_url string")
+    return plant_rows(
+        df, rows, cols=["doc_id", "source"],
+        schema="doc_id long, html string, base_url string",
+    )

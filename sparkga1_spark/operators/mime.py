@@ -22,12 +22,10 @@ from __future__ import annotations
 import base64
 import binascii
 import re
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 
-from sparkga1_spark.operators.multimodal import _decode_map, _planted
+from sparkga1_spark.operators.transform import map_rows, plant_rows
 
 _ENCODED_WORD_RE = re.compile(r"=\?([^?]+)\?([QqBb])\?([^?]*)\?=")
 
@@ -314,51 +312,37 @@ def extract_mime(df: DataFrame, *, payload_col: str = "payload") -> DataFrame:
     length. Map-only."""
     from sparkga1_spark.operators.crawl import decode_http_body
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf[payload_col]):
-                msg = parse_mime(bytes(payload))
-                plain, plain_cs = next(
-                    ((b, cs) for t, b, cs in msg["parts"] if t == "text/plain"),
-                    (b"", None),
-                )
-                html = next(
-                    (b for t, b, _cs in msg["parts"] if t == "text/html"), b""
-                )
-                text, _, _ = decode_http_body(
-                    plain,
-                    f"text/plain; charset={plain_cs}" if plain_cs else None,
-                )
-                out.append(
-                    (
-                        doc_id,
-                        msg["subject"],
-                        msg["from"],
-                        len(msg["parts"]),
-                        text,
-                        len(html),
-                    )
-                )
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "doc_id", "subject", "from_addr", "n_parts",
-                    "plain_text", "html_len",
-                ],
-            )
+    def rows(doc_id, payload):
+        msg = parse_mime(bytes(payload))
+        plain, plain_cs = next(
+            ((b, cs) for t, b, cs in msg["parts"] if t == "text/plain"),
+            (b"", None),
+        )
+        html = next(
+            (b for t, b, _cs in msg["parts"] if t == "text/html"), b""
+        )
+        text, _, _ = decode_http_body(
+            plain,
+            f"text/plain; charset={plain_cs}" if plain_cs else None,
+        )
+        yield (
+            doc_id,
+            msg["subject"],
+            msg["from"],
+            len(msg["parts"]),
+            text,
+            len(html),
+        )
 
-    return _decode_map(df, run, MIME_SCHEMA)
+    return map_rows(df, rows, cols=["doc_id", payload_col], schema=MIME_SCHEMA)
 
 
 def plant_mime_payloads(df: DataFrame, *, text_col: str = "text") -> DataFrame:
     """(doc_id, text) → (doc_id, payload): one real multipart message
     per document (see build_mime)."""
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id, text in zip(pdf["doc_id"], pdf[text_col]):
-                out.append((doc_id, build_mime(int(doc_id), text or "")))
-            yield pd.DataFrame(out, columns=["doc_id", "payload"])
+    def rows(doc_id, text):
+        yield (doc_id, build_mime(int(doc_id), text or ""))
 
-    return _planted(df, run, "doc_id long, payload binary")
+    return plant_rows(
+        df, rows, cols=["doc_id", text_col], schema="doc_id long, payload binary"
+    )

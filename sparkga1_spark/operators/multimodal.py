@@ -1,9 +1,11 @@
 """Multimodal column plumbing (BASELINE.json north star).
 
 Images / audio / video are opaque `binary` columns plus typed metadata
-structs; every transform is an Arrow-batched `mapInPandas` stage so the
-Spark side — schema, partitioning, batch shape — is real and tested
-even though this environment ships no codec libraries.
+structs; every transform is a plain per-row function on the transform.py
+row boundary (`map_rows` for decoders, `plant_rows` for the fixture
+planters, which a directly chained decoder fuses with), so the Spark
+side — schema, partitioning, Arrow batch shape — is real and tested
+even though no codec library is required.
 
 DECODE POLICY (r3): public containers whose decode needs nothing
 beyond the stdlib are parsed FOR REAL in pure Python/numpy — BMP and
@@ -54,8 +56,8 @@ cannot appear in stills, refuse). Swapping in a codec library
 changes no schema and no plan shape.
 
 Scale notes: binary payloads ride the scan/shuffle as plain columns —
-size the partitions with spark.sql.files.maxPartitionBytes; transforms
-are per-batch (no per-row Python), and metadata-only stages (frame
+size the partitions with spark.sql.files.maxPartitionBytes; rows cross
+the JVM↔Python boundary in Arrow batches, and metadata-only stages (frame
 selection, filtering by width) run JVM-side on the extracted struct
 columns without touching bytes.
 """
@@ -64,10 +66,9 @@ from __future__ import annotations
 
 import hashlib
 import struct
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from sparkga1_spark.operators.transform import map_rows, plant_rows
 
 IMAGE_META_SCHEMA = (
     "doc_id long, byte_len int, width int, height int, channels int, format string"
@@ -841,19 +842,12 @@ def _decode_image_meta(data: bytes) -> tuple[int, int, int, str]:
 def decode_images(df: DataFrame, *, payload_col: str = "payload") -> DataFrame:
     """binary → typed image metadata (one row per input row)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf[payload_col]):
-                data = bytes(payload)
-                w, h, c, fmt = _decode_image_meta(data)
-                out.append((doc_id, len(data), w, h, c, fmt))
-            yield pd.DataFrame(
-                out,
-                columns=["doc_id", "byte_len", "width", "height", "channels", "format"],
-            )
+    def rows(doc_id, payload):
+        data = bytes(payload)
+        w, h, c, fmt = _decode_image_meta(data)
+        yield (doc_id, len(data), w, h, c, fmt)
 
-    return _decode_map(df, run, IMAGE_META_SCHEMA)
+    return map_rows(df, rows, cols=["doc_id", payload_col], schema=IMAGE_META_SCHEMA)
 
 
 def sample_frames(
@@ -864,22 +858,16 @@ def sample_frames(
     timestamps are real logic (duration derived from payload length);
     the frame DECODE is the stub (frame_hash = md5(payload ‖ index))."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf[payload_col]):
-                data = bytes(payload)
-                duration_ms = len(data) * 10  # stub: 10ms per byte
-                n = min(max_frames, max(1, duration_ms // fps_ms))
-                for i in range(int(n)):
-                    ts = i * fps_ms
-                    fh = _payload_hash(data + str(i).encode())
-                    out.append((doc_id, i, ts, fh))
-            yield pd.DataFrame(
-                out, columns=["doc_id", "frame_idx", "frame_ts_ms", "frame_hash"]
-            )
+    def rows(doc_id, payload):
+        data = bytes(payload)
+        duration_ms = len(data) * 10  # stub: 10ms per byte
+        n = min(max_frames, max(1, duration_ms // fps_ms))
+        for i in range(int(n)):
+            ts = i * fps_ms
+            fh = _payload_hash(data + str(i).encode())
+            yield (doc_id, i, ts, fh)
 
-    return _decode_map(df, run, FRAME_SCHEMA)
+    return map_rows(df, rows, cols=["doc_id", payload_col], schema=FRAME_SCHEMA)
 
 
 def audio_features(df: DataFrame, *, payload_col: str = "payload") -> DataFrame:
@@ -891,35 +879,26 @@ def audio_features(df: DataFrame, *, payload_col: str = "payload") -> DataFrame:
     (sum of byte values as 'RMS' — deterministic)."""
     import numpy as np
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf[payload_col]):
-                data = bytes(payload)
-                try:
-                    if data[:4] == FLAC_MAGIC:
-                        n_samples, rate, samples = parse_flac(data)
-                    else:
-                        n_samples, rate, samples = parse_wav(data)
-                    energy = int(np.abs(samples.astype(np.int64)).sum())
-                except ValueError:
-                    n_samples, rate = len(data), 16_000
-                    energy = sum(data)
-                out.append(
-                    (
-                        doc_id,
-                        n_samples,
-                        rate,
-                        n_samples * 1000 // rate,
-                        energy,
-                    )
-                )
-            yield pd.DataFrame(
-                out,
-                columns=["doc_id", "n_samples", "sample_rate", "duration_ms", "rms"],
-            )
+    def rows(doc_id, payload):
+        data = bytes(payload)
+        try:
+            if data[:4] == FLAC_MAGIC:
+                n_samples, rate, samples = parse_flac(data)
+            else:
+                n_samples, rate, samples = parse_wav(data)
+            energy = int(np.abs(samples.astype(np.int64)).sum())
+        except ValueError:
+            n_samples, rate = len(data), 16_000
+            energy = sum(data)
+        yield (
+            doc_id,
+            n_samples,
+            rate,
+            n_samples * 1000 // rate,
+            energy,
+        )
 
-    return _decode_map(df, run, AUDIO_FEATURE_SCHEMA)
+    return map_rows(df, rows, cols=["doc_id", payload_col], schema=AUDIO_FEATURE_SCHEMA)
 
 
 RESIZED_SCHEMA = (
@@ -1012,31 +991,20 @@ def resize_images(
     the stage is map-only, so at 100 TB it scales with scan parallelism."""
     import numpy as np
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf[payload_col]):
-                img = _decode_image_pixels(bytes(payload))
-                resized = _bilinear_resize(img, height, width)
-                buf = resized.tobytes()
-                out.append(
-                    (
-                        doc_id,
-                        width,
-                        height,
-                        img.shape[2],
-                        buf,
-                        int(np.uint64(0) + resized.sum(dtype=np.uint64)),
-                    )
-                )
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "doc_id", "width", "height", "channels", "data", "px_checksum",
-                ],
-            )
+    def rows(doc_id, payload):
+        img = _decode_image_pixels(bytes(payload))
+        resized = _bilinear_resize(img, height, width)
+        buf = resized.tobytes()
+        yield (
+            doc_id,
+            width,
+            height,
+            img.shape[2],
+            buf,
+            int(np.uint64(0) + resized.sum(dtype=np.uint64)),
+        )
 
-    return _decode_map(df, run, RESIZED_SCHEMA)
+    return map_rows(df, rows, cols=["doc_id", payload_col], schema=RESIZED_SCHEMA)
 
 
 # --------------------------------------------------------------------------
@@ -1049,70 +1017,21 @@ def resize_images(
 # --------------------------------------------------------------------------
 
 
-def _spread(df: DataFrame) -> DataFrame:
-    """Repartition a (doc_id, text)-sized projection to the session's
-    full parallelism before entering a Python codec chain. Codec stages
-    are CPU-bound, not scan-bound: a small table often arrives as ONE
-    scan partition (observed at sf0.1 — the whole plant→decode chain
-    ran as a single task on a 32-core session), and the chain inherits
-    the planter's partitioning because back-to-back mapInPandas stages
-    add no exchange. The shuffle moves only ids + text, negligible
-    against the per-row encode/decode CPU; on a real cluster it also
-    decouples codec parallelism from file layout (a 100 TB corpus may
-    still have skewed or few-but-huge files)."""
-    sc = df.sparkSession.sparkContext
-    return df.repartition(sc.defaultParallelism)
-
-
-def _planted(src: DataFrame, run, schema: str) -> DataFrame:
-    """Planter tail-call: spread + mapInPandas, remembering (src, run)
-    on the returned DataFrame so a directly-chained decode stage can
-    FUSE with the planter (r13 optimization, guide §4.1 — every
-    chained Python map operator is its own JVM↔Python round trip;
-    measured ~0.15-0.35 s of pure boundary latency per extra hop at 32
-    tasks even for an identity function). The attribute is advisory:
-    any consumer that is not `_decode_map` simply executes the planted
-    frame as before."""
-    out = _spread(src).mapInPandas(run, schema=schema)
-    out._plant_fusion = (src, run)
-    return out
-
-
-def _decode_map(df: DataFrame, run, schema) -> DataFrame:
-    """Decoder entry: when `df` came straight from a `_planted` call,
-    chain the planter's batch generator into the decoder's inside ONE
-    mapInPandas — payload bytes then never cross back through the JVM
-    between plant and decode. Otherwise behave exactly as
-    df.mapInPandas(run, schema). Result rows are identical either way
-    (the intermediate frame was a pure pass-through)."""
-    fusion = getattr(df, "_plant_fusion", None)
-    if fusion is None:
-        return df.mapInPandas(run, schema=schema)
-    src, prun = fusion
-
-    def chained(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        yield from run(prun(batches))
-
-    return _spread(src).mapInPandas(chained, schema=schema)
-
-
 def plant_bmp_payloads(df: DataFrame, *, text_col: str = "text") -> DataFrame:
     """(doc_id, text) → (doc_id, payload): a real 24-bit BMP whose
     dimensions are closed-form in doc_id (w = id%61+4, h = id%37+4) and
     whose pixels tile the UTF-8 bytes of `text`."""
     import numpy as np
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id, text_val in zip(pdf["doc_id"], pdf[text_col]):
-                w, h = int(doc_id) % 61 + 4, int(doc_id) % 37 + 4
-                raw = (text_val or "").encode("utf-8") or b"\0"
-                px = np.resize(np.frombuffer(raw, np.uint8), (h, w, 3))
-                out.append((doc_id, build_bmp(px)))
-            yield pd.DataFrame(out, columns=["doc_id", "payload"])
+    def rows(doc_id, text_val):
+        w, h = int(doc_id) % 61 + 4, int(doc_id) % 37 + 4
+        raw = (text_val or "").encode("utf-8") or b"\0"
+        px = np.resize(np.frombuffer(raw, np.uint8), (h, w, 3))
+        yield (doc_id, build_bmp(px))
 
-    return _planted(df, run, "doc_id long, payload binary")
+    return plant_rows(
+        df, rows, cols=["doc_id", text_col], schema="doc_id long, payload binary"
+    )
 
 
 def plant_png_payloads(df: DataFrame, *, text_col: str = "text") -> DataFrame:
@@ -1128,21 +1047,17 @@ def plant_png_payloads(df: DataFrame, *, text_col: str = "text") -> DataFrame:
     certifies both the progressive and the sequential decode paths."""
     import numpy as np
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id, text_val in zip(pdf["doc_id"], pdf[text_col]):
-                d = int(doc_id)
-                w, h = d % 48 + 4, d % 32 + 4
-                raw = (text_val or "").encode("utf-8") or b"\0"
-                px = np.resize(np.frombuffer(raw, np.uint8), (h, w, 3))
-                filters = [(d + r) % 5 for r in range(h)]
-                out.append(
-                    (doc_id, build_png(px, filters=filters, interlace=d % 2 == 1))
-                )
-            yield pd.DataFrame(out, columns=["doc_id", "payload"])
+    def rows(doc_id, text_val):
+        d = int(doc_id)
+        w, h = d % 48 + 4, d % 32 + 4
+        raw = (text_val or "").encode("utf-8") or b"\0"
+        px = np.resize(np.frombuffer(raw, np.uint8), (h, w, 3))
+        filters = [(d + r) % 5 for r in range(h)]
+        yield (doc_id, build_png(px, filters=filters, interlace=d % 2 == 1))
 
-    return _planted(df, run, "doc_id long, payload binary")
+    return plant_rows(
+        df, rows, cols=["doc_id", text_col], schema="doc_id long, payload binary"
+    )
 
 
 IMAGE_STATS_SCHEMA = (
@@ -1157,23 +1072,14 @@ def decode_image_stats(df: DataFrame, *, payload_col: str = "payload") -> DataFr
     decode — for PNG that is inflate + unfilter, not just IHDR."""
     import numpy as np
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf[payload_col]):
-                data = bytes(payload)
-                _, _, _, fmt = _decode_image_meta(data)
-                px = _decode_image_pixels(data)
-                h, w, c = px.shape
-                out.append(
-                    (doc_id, w, h, c, fmt, int(px.sum(dtype=np.int64)))
-                )
-            yield pd.DataFrame(
-                out,
-                columns=["doc_id", "width", "height", "channels", "format", "px_sum"],
-            )
+    def rows(doc_id, payload):
+        data = bytes(payload)
+        _, _, _, fmt = _decode_image_meta(data)
+        px = _decode_image_pixels(data)
+        h, w, c = px.shape
+        yield (doc_id, w, h, c, fmt, int(px.sum(dtype=np.int64)))
 
-    return _decode_map(df, run, IMAGE_STATS_SCHEMA)
+    return map_rows(df, rows, cols=["doc_id", payload_col], schema=IMAGE_STATS_SCHEMA)
 
 
 def plant_wav_payloads(df: DataFrame) -> DataFrame:
@@ -1182,18 +1088,14 @@ def plant_wav_payloads(df: DataFrame) -> DataFrame:
     odd) and samples s_i = (id*31 + i*7) % 1001 - 500."""
     import numpy as np
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                n = d % 200 + 50
-                rate = 16_000 if d % 2 == 0 else 8_000
-                samples = ((d * 31 + 7 * np.arange(n, dtype=np.int64)) % 1001 - 500)
-                out.append((doc_id, build_wav(samples, sample_rate=rate)))
-            yield pd.DataFrame(out, columns=["doc_id", "payload"])
+    def rows(doc_id):
+        d = int(doc_id)
+        n = d % 200 + 50
+        rate = 16_000 if d % 2 == 0 else 8_000
+        samples = ((d * 31 + 7 * np.arange(n, dtype=np.int64)) % 1001 - 500)
+        yield (doc_id, build_wav(samples, sample_rate=rate))
 
-    return _planted(df, run, "doc_id long, payload binary")
+    return plant_rows(df, rows, cols=["doc_id"], schema="doc_id long, payload binary")
 
 
 def plant_ulaw_payloads(df: DataFrame) -> DataFrame:
@@ -1203,19 +1105,13 @@ def plant_ulaw_payloads(df: DataFrame) -> DataFrame:
     µ-law expansion path decodes for real."""
     import numpy as np
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                n = d % 160 + 40
-                codes = (d * 13 + 7 * np.arange(n, dtype=np.int64)) % 256
-                out.append(
-                    (doc_id, build_wav_ulaw(codes.astype(np.uint8), sample_rate=8000))
-                )
-            yield pd.DataFrame(out, columns=["doc_id", "payload"])
+    def rows(doc_id):
+        d = int(doc_id)
+        n = d % 160 + 40
+        codes = (d * 13 + 7 * np.arange(n, dtype=np.int64)) % 256
+        yield (doc_id, build_wav_ulaw(codes.astype(np.uint8), sample_rate=8000))
 
-    return _planted(df, run, "doc_id long, payload binary")
+    return plant_rows(df, rows, cols=["doc_id"], schema="doc_id long, payload binary")
 
 
 def plant_alaw_payloads(df: DataFrame) -> DataFrame:
@@ -1224,19 +1120,13 @@ def plant_alaw_payloads(df: DataFrame) -> DataFrame:
     n = id%140+50 samples at 8 kHz."""
     import numpy as np
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                n = d % 140 + 50
-                codes = (d * 17 + 11 * np.arange(n, dtype=np.int64)) % 256
-                out.append(
-                    (doc_id, build_wav_alaw(codes.astype(np.uint8), sample_rate=8000))
-                )
-            yield pd.DataFrame(out, columns=["doc_id", "payload"])
+    def rows(doc_id):
+        d = int(doc_id)
+        n = d % 140 + 50
+        codes = (d * 17 + 11 * np.arange(n, dtype=np.int64)) % 256
+        yield (doc_id, build_wav_alaw(codes.astype(np.uint8), sample_rate=8000))
 
-    return _planted(df, run, "doc_id long, payload binary")
+    return plant_rows(df, rows, cols=["doc_id"], schema="doc_id long, payload binary")
 
 
 def plant_adpcm_payloads(df: DataFrame) -> DataFrame:
@@ -1248,27 +1138,21 @@ def plant_adpcm_payloads(df: DataFrame) -> DataFrame:
     predictor, at 8 kHz."""
     import numpy as np
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                n = 2 * (d % 60 + 20)
-                nibs = (d * 11 + 5 * np.arange(n, dtype=np.int64)) % 16
-                out.append(
-                    (
-                        doc_id,
-                        build_wav_adpcm(
-                            nibs.tolist(),
-                            sample_rate=8000,
-                            predictor=(d * 97) % 2001 - 1000,
-                            index=d % 89,
-                        ),
-                    )
-                )
-            yield pd.DataFrame(out, columns=["doc_id", "payload"])
+    def rows(doc_id):
+        d = int(doc_id)
+        n = 2 * (d % 60 + 20)
+        nibs = (d * 11 + 5 * np.arange(n, dtype=np.int64)) % 16
+        yield (
+            doc_id,
+            build_wav_adpcm(
+                nibs.tolist(),
+                sample_rate=8000,
+                predictor=(d * 97) % 2001 - 1000,
+                index=d % 89,
+            ),
+        )
 
-    return _planted(df, run, "doc_id long, payload binary")
+    return plant_rows(df, rows, cols=["doc_id"], schema="doc_id long, payload binary")
 
 
 def plant_jpeg_payloads(df: DataFrame, *, text_col: str = "text") -> DataFrame:
@@ -1278,20 +1162,18 @@ def plant_jpeg_payloads(df: DataFrame, *, text_col: str = "text") -> DataFrame:
     % 255 by build_jpeg). byte_len is closed-form: 146 + id%97+16."""
     import numpy as np
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id, text_val in zip(pdf["doc_id"], pdf[text_col]):
-                d = int(doc_id)
-                w, h = d % 53 + 4, d % 43 + 4
-                raw = (text_val or "").encode("utf-8") or b"\0"
-                entropy = np.resize(
-                    np.frombuffer(raw, np.uint8), d % 97 + 16
-                ).tobytes()
-                out.append((doc_id, build_jpeg(w, h, entropy)))
-            yield pd.DataFrame(out, columns=["doc_id", "payload"])
+    def rows(doc_id, text_val):
+        d = int(doc_id)
+        w, h = d % 53 + 4, d % 43 + 4
+        raw = (text_val or "").encode("utf-8") or b"\0"
+        entropy = np.resize(
+            np.frombuffer(raw, np.uint8), d % 97 + 16
+        ).tobytes()
+        yield (doc_id, build_jpeg(w, h, entropy))
 
-    return _planted(df, run, "doc_id long, payload binary")
+    return plant_rows(
+        df, rows, cols=["doc_id", text_col], schema="doc_id long, payload binary"
+    )
 
 
 # --------------------------------------------------------------------------
@@ -1364,30 +1246,19 @@ def decode_video_frames(df: DataFrame, *, payload_col: str = "payload") -> DataF
     the oracle computes the expected sums in closed form."""
     import numpy as np
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf[payload_col]):
-                w, h, fps, frames = parse_y4m(bytes(payload))
-                for i, plane in enumerate(frames):
-                    out.append(
-                        (
-                            doc_id,
-                            i,
-                            i * 1000 // fps,
-                            w,
-                            h,
-                            int(plane.sum(dtype=np.int64)),
-                        )
-                    )
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "doc_id", "frame_idx", "frame_ts_ms", "width", "height", "luma_sum",
-                ],
+    def rows(doc_id, payload):
+        w, h, fps, frames = parse_y4m(bytes(payload))
+        for i, plane in enumerate(frames):
+            yield (
+                doc_id,
+                i,
+                i * 1000 // fps,
+                w,
+                h,
+                int(plane.sum(dtype=np.int64)),
             )
 
-    return _decode_map(df, run, VIDEO_FRAME_SCHEMA)
+    return map_rows(df, rows, cols=["doc_id", payload_col], schema=VIDEO_FRAME_SCHEMA)
 
 
 def plant_y4m_payloads(df: DataFrame) -> DataFrame:
@@ -1399,25 +1270,21 @@ def plant_y4m_payloads(df: DataFrame) -> DataFrame:
     parser still break it."""
     import numpy as np
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                w, h = (d % 30 + 2) * 2, (d % 20 + 2) * 2
-                n = d % 6 + 2
-                frames = [
-                    np.tile(
-                        ((d + f * 31 + np.arange(h, dtype=np.int64)) % 256)
-                        .astype(np.uint8)[:, None],
-                        (1, w),
-                    )
-                    for f in range(n)
-                ]
-                out.append((doc_id, build_y4m(frames)))
-            yield pd.DataFrame(out, columns=["doc_id", "payload"])
+    def rows(doc_id):
+        d = int(doc_id)
+        w, h = (d % 30 + 2) * 2, (d % 20 + 2) * 2
+        n = d % 6 + 2
+        frames = [
+            np.tile(
+                ((d + f * 31 + np.arange(h, dtype=np.int64)) % 256)
+                .astype(np.uint8)[:, None],
+                (1, w),
+            )
+            for f in range(n)
+        ]
+        yield (doc_id, build_y4m(frames))
 
-    return _planted(df, run, "doc_id long, payload binary")
+    return plant_rows(df, rows, cols=["doc_id"], schema="doc_id long, payload binary")
 
 
 # --------------------------------------------------------------------------
@@ -1602,18 +1469,16 @@ def plant_qoi_payloads(df: DataFrame, *, text_col: str = "text") -> DataFrame:
     oracle's closed-form px_sum pins the whole encode→decode loop."""
     import numpy as np
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id, text_val in zip(pdf["doc_id"], pdf[text_col]):
-                d = int(doc_id)
-                w, h = d % 40 + 4, d % 28 + 4
-                raw = (text_val or "").encode("utf-8") or b"\0"
-                px = np.resize(np.frombuffer(raw, np.uint8), (h, w, 3))
-                out.append((doc_id, build_qoi(px)))
-            yield pd.DataFrame(out, columns=["doc_id", "payload"])
+    def rows(doc_id, text_val):
+        d = int(doc_id)
+        w, h = d % 40 + 4, d % 28 + 4
+        raw = (text_val or "").encode("utf-8") or b"\0"
+        px = np.resize(np.frombuffer(raw, np.uint8), (h, w, 3))
+        yield (doc_id, build_qoi(px))
 
-    return _planted(df, run, "doc_id long, payload binary")
+    return plant_rows(
+        df, rows, cols=["doc_id", text_col], schema="doc_id long, payload binary"
+    )
 
 
 # --------------------------------------------------------------------------
@@ -1926,18 +1791,16 @@ def plant_gif_payloads(df: DataFrame, *, text_col: str = "text") -> DataFrame:
     certifies both row layouts."""
     import numpy as np
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id, text_val in zip(pdf["doc_id"], pdf[text_col]):
-                d = int(doc_id)
-                w, h = d % 36 + 4, d % 24 + 4
-                raw = (text_val or "").encode("utf-8") or b"\0"
-                idx = np.resize(np.frombuffer(raw, np.uint8), h * w)
-                out.append((doc_id, build_gif(idx, w, h, interlace=d % 2 == 1)))
-            yield pd.DataFrame(out, columns=["doc_id", "payload"])
+    def rows(doc_id, text_val):
+        d = int(doc_id)
+        w, h = d % 36 + 4, d % 24 + 4
+        raw = (text_val or "").encode("utf-8") or b"\0"
+        idx = np.resize(np.frombuffer(raw, np.uint8), h * w)
+        yield (doc_id, build_gif(idx, w, h, interlace=d % 2 == 1))
 
-    return _planted(df, run, "doc_id long, payload binary")
+    return plant_rows(
+        df, rows, cols=["doc_id", text_col], schema="doc_id long, payload binary"
+    )
 
 
 # --------------------------------------------------------------------------
@@ -2071,18 +1934,16 @@ def plant_pcx_payloads(df: DataFrame, *, text_col: str = "text") -> DataFrame:
     the rest, so both RLE branches are exercised per payload."""
     import numpy as np
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id, text_val in zip(pdf["doc_id"], pdf[text_col]):
-                d = int(doc_id)
-                w, h = d % 44 + 4, d % 20 + 4
-                raw = (text_val or "").encode("utf-8") or b"\0"
-                px = np.resize(np.frombuffer(raw, np.uint8), (h, w, 3))
-                out.append((doc_id, build_pcx(px)))
-            yield pd.DataFrame(out, columns=["doc_id", "payload"])
+    def rows(doc_id, text_val):
+        d = int(doc_id)
+        w, h = d % 44 + 4, d % 20 + 4
+        raw = (text_val or "").encode("utf-8") or b"\0"
+        px = np.resize(np.frombuffer(raw, np.uint8), (h, w, 3))
+        yield (doc_id, build_pcx(px))
 
-    return _planted(df, run, "doc_id long, payload binary")
+    return plant_rows(
+        df, rows, cols=["doc_id", text_col], schema="doc_id long, payload binary"
+    )
 
 
 # --------------------------------------------------------------------------
@@ -5294,107 +5155,105 @@ def plant_jpeg_real_payloads(df: DataFrame, *, text_col: str = "text") -> DataFr
     cost (the PNG/GIF interlace precedent)."""
     import numpy as np
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id, text_val in zip(pdf["doc_id"], pdf[text_col]):
-                d = int(doc_id)
-                wb, hb = d % 5 + 1, d % 3 + 1
-                raw = (text_val or "").encode("utf-8") or b"\0"
-                vals = np.resize(np.frombuffer(raw, np.uint8), (hb, wb))
-                img = np.repeat(np.repeat(vals, 8, axis=0), 8, axis=1)
-                if d % 4 == 1:
-                    rgb = np.repeat(img[:, :, None], 3, axis=2)
-                    blob = build_jpeg_progressive(
-                        rgb,
-                        successive=True,
-                        # r9 layout rotation: 4:2:0 subsampled vs
-                        # 4:4:4-with-restarts (both exactly lossless
-                        # on gray tiles — see docstring)
-                        sampling=(2, 2) if d % 8 == 1 else None,
-                        restart_interval=2 if d % 8 == 5 else 0,
-                    )
-                elif d % 4 == 3:
-                    blob = build_jpeg_progressive(
-                        img, restart_interval=2 if d % 8 == 7 else 0
-                    )
-                elif d % 4 == 2:
-                    # r10: ARITHMETIC entropy coding (T.81 QM coder) —
-                    # ids %8==2 sequential (SOF9 + DAC), ids %8==6
-                    # PROGRESSIVE arithmetic (SOF10) with the full
-                    # successive-approximation script AND a restart
-                    # interval; flat blocks stay exactly lossless, so
-                    # the closed-form oracle is untouched. r12 rotates
-                    # the late-r11 12-BIT arithmetic classes into the
-                    # gate row: ids %32==2 are 12-bit SOF9, ids %32==6
-                    # 12-bit SOF10 (flat blocks exact at either level
-                    # shift, so channels/px_sum are unchanged; decode
-                    # dtype widens to uint16 as in the %16==4 slot)
-                    prec = 12 if d % 32 in (2, 6) else 8
-                    if d % 8 == 6:
-                        blob = build_jpeg_arith_progressive(
-                            img, successive=True, restart_interval=2,
-                            precision=prec,
-                        )
-                    else:
-                        blob = build_jpeg_arith(img, precision=prec)
-                elif d % 16 == 0:
-                    # r11: LOSSLESS SOF3 — same tiled pixels, exact by
-                    # the codec's own contract (not just flat blocks);
-                    # the spatial predictor rotates with the id so the
-                    # row covers all seven over the corpus
-                    blob = build_jpeg_lossless(
-                        img, predictor=(d // 16) % 7 + 1
-                    )
-                elif d % 16 == 4:
-                    # r11: 12-BIT frames — the byte values land in
-                    # 0..255 of the 0..4095 range and flat blocks stay
-                    # exactly lossless, so channels and the closed-form
-                    # px_sum are untouched. ids %32==4 extended
-                    # sequential SOF1; ids %32==20 PROGRESSIVE SOF2
-                    # with successive approximation and restarts
-                    if d % 32 == 20:
-                        blob = build_jpeg_progressive(
-                            img, precision=12, successive=True,
-                            restart_interval=2,
-                        )
-                    else:
-                        blob = build_jpeg_ext12(img)
-                elif d % 32 == 8:
-                    # r13: HIERARCHICAL lossless pyramid (T.81 Annex J
-                    # — DHP, SOF3 base, EXP expansion, differential
-                    # SOF7 frames). Exact for ANY content at any
-                    # precision by the codec's own contract, so the
-                    # closed form holds trivially; ids %64==40 rotate
-                    # a deeper 12-BIT pyramid with restart intervals
-                    # (decode dtype widens to uint16, px_sum
-                    # unchanged)
-                    if d % 64 == 40:
-                        blob = build_jpeg_hierarchical(
-                            img, mode="lossless", levels=3,
-                            precision=12, restart_interval=2,
-                        )
-                    else:
-                        blob = build_jpeg_hierarchical(
-                            img, mode="lossless", levels=2
-                        )
-                elif d % 32 == 24:
-                    # r13: HIERARCHICAL DCT quality ladder (SOF0 base
-                    # with low bits split off + ONE differential SOF5
-                    # refinement at quant 1) — flat 8x8 tiles decode
-                    # exactly through both frames, so the closed-form
-                    # oracle is untouched; ids %64==56 add restart
-                    # intervals to every frame
-                    blob = build_jpeg_hierarchical(
-                        img, mode="dct",
-                        restart_interval=2 if d % 64 == 56 else 0,
-                    )
-                else:
-                    blob = build_jpeg_baseline(img)
-                out.append((doc_id, blob))
-            yield pd.DataFrame(out, columns=["doc_id", "payload"])
+    def rows(doc_id, text_val):
+        d = int(doc_id)
+        wb, hb = d % 5 + 1, d % 3 + 1
+        raw = (text_val or "").encode("utf-8") or b"\0"
+        vals = np.resize(np.frombuffer(raw, np.uint8), (hb, wb))
+        img = np.repeat(np.repeat(vals, 8, axis=0), 8, axis=1)
+        if d % 4 == 1:
+            rgb = np.repeat(img[:, :, None], 3, axis=2)
+            blob = build_jpeg_progressive(
+                rgb,
+                successive=True,
+                # r9 layout rotation: 4:2:0 subsampled vs
+                # 4:4:4-with-restarts (both exactly lossless
+                # on gray tiles — see docstring)
+                sampling=(2, 2) if d % 8 == 1 else None,
+                restart_interval=2 if d % 8 == 5 else 0,
+            )
+        elif d % 4 == 3:
+            blob = build_jpeg_progressive(
+                img, restart_interval=2 if d % 8 == 7 else 0
+            )
+        elif d % 4 == 2:
+            # r10: ARITHMETIC entropy coding (T.81 QM coder) —
+            # ids %8==2 sequential (SOF9 + DAC), ids %8==6
+            # PROGRESSIVE arithmetic (SOF10) with the full
+            # successive-approximation script AND a restart
+            # interval; flat blocks stay exactly lossless, so
+            # the closed-form oracle is untouched. r12 rotates
+            # the late-r11 12-BIT arithmetic classes into the
+            # gate row: ids %32==2 are 12-bit SOF9, ids %32==6
+            # 12-bit SOF10 (flat blocks exact at either level
+            # shift, so channels/px_sum are unchanged; decode
+            # dtype widens to uint16 as in the %16==4 slot)
+            prec = 12 if d % 32 in (2, 6) else 8
+            if d % 8 == 6:
+                blob = build_jpeg_arith_progressive(
+                    img, successive=True, restart_interval=2,
+                    precision=prec,
+                )
+            else:
+                blob = build_jpeg_arith(img, precision=prec)
+        elif d % 16 == 0:
+            # r11: LOSSLESS SOF3 — same tiled pixels, exact by
+            # the codec's own contract (not just flat blocks);
+            # the spatial predictor rotates with the id so the
+            # row covers all seven over the corpus
+            blob = build_jpeg_lossless(
+                img, predictor=(d // 16) % 7 + 1
+            )
+        elif d % 16 == 4:
+            # r11: 12-BIT frames — the byte values land in
+            # 0..255 of the 0..4095 range and flat blocks stay
+            # exactly lossless, so channels and the closed-form
+            # px_sum are untouched. ids %32==4 extended
+            # sequential SOF1; ids %32==20 PROGRESSIVE SOF2
+            # with successive approximation and restarts
+            if d % 32 == 20:
+                blob = build_jpeg_progressive(
+                    img, precision=12, successive=True,
+                    restart_interval=2,
+                )
+            else:
+                blob = build_jpeg_ext12(img)
+        elif d % 32 == 8:
+            # r13: HIERARCHICAL lossless pyramid (T.81 Annex J
+            # — DHP, SOF3 base, EXP expansion, differential
+            # SOF7 frames). Exact for ANY content at any
+            # precision by the codec's own contract, so the
+            # closed form holds trivially; ids %64==40 rotate
+            # a deeper 12-BIT pyramid with restart intervals
+            # (decode dtype widens to uint16, px_sum
+            # unchanged)
+            if d % 64 == 40:
+                blob = build_jpeg_hierarchical(
+                    img, mode="lossless", levels=3,
+                    precision=12, restart_interval=2,
+                )
+            else:
+                blob = build_jpeg_hierarchical(
+                    img, mode="lossless", levels=2
+                )
+        elif d % 32 == 24:
+            # r13: HIERARCHICAL DCT quality ladder (SOF0 base
+            # with low bits split off + ONE differential SOF5
+            # refinement at quant 1) — flat 8x8 tiles decode
+            # exactly through both frames, so the closed-form
+            # oracle is untouched; ids %64==56 add restart
+            # intervals to every frame
+            blob = build_jpeg_hierarchical(
+                img, mode="dct",
+                restart_interval=2 if d % 64 == 56 else 0,
+            )
+        else:
+            blob = build_jpeg_baseline(img)
+        yield (doc_id, blob)
 
-    return _planted(df, run, "doc_id long, payload binary")
+    return plant_rows(
+        df, rows, cols=["doc_id", text_col], schema="doc_id long, payload binary"
+    )
 
 
 # --------------------------------------------------------------------------
@@ -5997,17 +5856,13 @@ def plant_flac_payloads(df: DataFrame) -> DataFrame:
     the Rice parameter search in every payload."""
     import numpy as np
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                n = d % 200 + 50
-                s = ((d * 19 + 13 * np.arange(n, dtype=np.int64)) % 256 - 128) * 256
-                out.append((doc_id, build_flac(s, sample_rate=8000)))
-            yield pd.DataFrame(out, columns=["doc_id", "payload"])
+    def rows(doc_id):
+        d = int(doc_id)
+        n = d % 200 + 50
+        s = ((d * 19 + 13 * np.arange(n, dtype=np.int64)) % 256 - 128) * 256
+        yield (doc_id, build_flac(s, sample_rate=8000))
 
-    return _planted(df, run, "doc_id long, payload binary")
+    return plant_rows(df, rows, cols=["doc_id"], schema="doc_id long, payload binary")
 
 
 # --------------------------------------------------------------------------
@@ -6225,32 +6080,20 @@ def decode_mjpeg_frames(df: DataFrame, *, payload_col: str = "payload") -> DataF
     breaks px_sum."""
     import numpy as np
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf[payload_col]):
-                w, h, fps, frames = parse_avi_mjpeg(bytes(payload))
-                for i, px in enumerate(frames):
-                    out.append(
-                        (
-                            doc_id,
-                            i,
-                            i * 1000 // fps,
-                            w,
-                            h,
-                            int(px.shape[2]),
-                            int(px.sum(dtype=np.int64)),
-                        )
-                    )
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "doc_id", "frame_idx", "frame_ts_ms", "width", "height",
-                    "channels", "px_sum",
-                ],
+    def rows(doc_id, payload):
+        w, h, fps, frames = parse_avi_mjpeg(bytes(payload))
+        for i, px in enumerate(frames):
+            yield (
+                doc_id,
+                i,
+                i * 1000 // fps,
+                w,
+                h,
+                int(px.shape[2]),
+                int(px.sum(dtype=np.int64)),
             )
 
-    return _decode_map(df, run, MJPEG_FRAME_SCHEMA)
+    return map_rows(df, rows, cols=["doc_id", payload_col], schema=MJPEG_FRAME_SCHEMA)
 
 
 def plant_avi_payloads(df: DataFrame, *, text_col: str = "text") -> DataFrame:
@@ -6269,30 +6112,28 @@ def plant_avi_payloads(df: DataFrame, *, text_col: str = "text") -> DataFrame:
     layout."""
     import numpy as np
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id, text_val in zip(pdf["doc_id"], pdf[text_col]):
-                d = int(doc_id)
-                wb, hb = d % 4 + 1, d % 3 + 1
-                n, fps = d % 4 + 2, d % 5 + 10
-                raw = (text_val or "").encode("utf-8") or b"\0"
-                bv = np.frombuffer(raw, np.uint8)
-                frames = []
-                for f in range(n):
-                    vals = bv[(np.arange(hb * wb) + f) % len(bv)].reshape(hb, wb)
-                    img = np.repeat(np.repeat(vals, 8, 0), 8, 1)
-                    if (d + f) % 4 == 1:
-                        rgb = np.repeat(img[:, :, None], 3, axis=2)
-                        frames.append(build_jpeg_progressive(rgb, successive=True))
-                    elif (d + f) % 4 == 3:
-                        frames.append(build_jpeg_progressive(img))
-                    else:
-                        frames.append(build_jpeg_baseline(img))
-                out.append((doc_id, build_avi_mjpeg(frames, 8 * wb, 8 * hb, fps=fps)))
-            yield pd.DataFrame(out, columns=["doc_id", "payload"])
+    def rows(doc_id, text_val):
+        d = int(doc_id)
+        wb, hb = d % 4 + 1, d % 3 + 1
+        n, fps = d % 4 + 2, d % 5 + 10
+        raw = (text_val or "").encode("utf-8") or b"\0"
+        bv = np.frombuffer(raw, np.uint8)
+        frames = []
+        for f in range(n):
+            vals = bv[(np.arange(hb * wb) + f) % len(bv)].reshape(hb, wb)
+            img = np.repeat(np.repeat(vals, 8, 0), 8, 1)
+            if (d + f) % 4 == 1:
+                rgb = np.repeat(img[:, :, None], 3, axis=2)
+                frames.append(build_jpeg_progressive(rgb, successive=True))
+            elif (d + f) % 4 == 3:
+                frames.append(build_jpeg_progressive(img))
+            else:
+                frames.append(build_jpeg_baseline(img))
+        yield (doc_id, build_avi_mjpeg(frames, 8 * wb, 8 * hb, fps=fps))
 
-    return _planted(df, run, "doc_id long, payload binary")
+    return plant_rows(
+        df, rows, cols=["doc_id", text_col], schema="doc_id long, payload binary"
+    )
 
 
 # --------------------------------------------------------------------------
@@ -6751,21 +6592,11 @@ def decode_mp4_meta(df: DataFrame, *, payload_col: str = "payload") -> DataFrame
     walk (geometry, duration, sample tables, codec). Pixel decode is
     NOT claimed — that is the honest H.264 boundary."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf[payload_col]):
-                w, h, dur, n, codec, sb = parse_mp4_meta(bytes(payload))
-                out.append((doc_id, w, h, dur, n, codec, sb))
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "doc_id", "width", "height", "duration_ms", "n_samples",
-                    "codec", "sample_bytes",
-                ],
-            )
+    def rows(doc_id, payload):
+        w, h, dur, n, codec, sb = parse_mp4_meta(bytes(payload))
+        yield (doc_id, w, h, dur, n, codec, sb)
 
-    return _decode_map(df, run, MP4_META_SCHEMA)
+    return map_rows(df, rows, cols=["doc_id", payload_col], schema=MP4_META_SCHEMA)
 
 
 def plant_mp4_payloads(df: DataFrame) -> DataFrame:
@@ -6783,42 +6614,36 @@ def plant_mp4_payloads(df: DataFrame) -> DataFrame:
     make a contiguous read provably wrong) while every closed-form
     oracle column is UNCHANGED (chunking never alters sample bytes)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                n = d % 30 + 5
-                sizes = [(d * 7 + i * 13) % 200 + 1 for i in range(n)]
-                m = d % 4
-                if m == 1:
-                    chunks, gap, co64 = [2] * (n // 2) + ([1] if n % 2 else []), 0, False
-                elif m == 2:
-                    chunks, gap, co64 = [3] * (n // 3) + ([n % 3] if n % 3 else []), 7, False
-                elif m == 3:
-                    r = n - 1
-                    chunks = [1] + [4] * (r // 4) + ([r % 4] if r % 4 else [])
-                    gap, co64 = 3, True
-                else:
-                    chunks, gap, co64 = None, 0, False
-                out.append(
-                    (
-                        doc_id,
-                        build_mp4_meta(
-                            d % 320 + 16,
-                            d % 240 + 16,
-                            sizes,
-                            sample_delta=d % 20 + 10,
-                            version1=(d % 3 == 0),
-                            chunks=chunks,
-                            chunk_gap=gap,
-                            co64=co64,
-                        ),
-                    )
-                )
-            yield pd.DataFrame(out, columns=["doc_id", "payload"])
+    def rows(doc_id):
+        d = int(doc_id)
+        n = d % 30 + 5
+        sizes = [(d * 7 + i * 13) % 200 + 1 for i in range(n)]
+        m = d % 4
+        if m == 1:
+            chunks, gap, co64 = [2] * (n // 2) + ([1] if n % 2 else []), 0, False
+        elif m == 2:
+            chunks, gap, co64 = [3] * (n // 3) + ([n % 3] if n % 3 else []), 7, False
+        elif m == 3:
+            r = n - 1
+            chunks = [1] + [4] * (r // 4) + ([r % 4] if r % 4 else [])
+            gap, co64 = 3, True
+        else:
+            chunks, gap, co64 = None, 0, False
+        yield (
+            doc_id,
+            build_mp4_meta(
+                d % 320 + 16,
+                d % 240 + 16,
+                sizes,
+                sample_delta=d % 20 + 10,
+                version1=(d % 3 == 0),
+                chunks=chunks,
+                chunk_gap=gap,
+                co64=co64,
+            ),
+        )
 
-    return _planted(df, run, "doc_id long, payload binary")
+    return plant_rows(df, rows, cols=["doc_id"], schema="doc_id long, payload binary")
 
 
 MP4_SAMPLE_SCHEMA = (
@@ -6833,20 +6658,11 @@ def demux_mp4_samples(df: DataFrame, *, payload_col: str = "payload") -> DataFra
     decoding the sample content is NOT claimed — the honest H.264
     boundary, one level deeper than decode_mp4_meta."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf[payload_col]):
-                for i, ts_ms, blob in parse_mp4_samples(bytes(payload)):
-                    out.append((doc_id, i, ts_ms, len(blob), sum(blob)))
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "doc_id", "sample_idx", "sample_ts_ms", "size", "byte_sum",
-                ],
-            )
+    def rows(doc_id, payload):
+        for i, ts_ms, blob in parse_mp4_samples(bytes(payload)):
+            yield (doc_id, i, ts_ms, len(blob), sum(blob))
 
-    return _decode_map(df, run, MP4_SAMPLE_SCHEMA)
+    return map_rows(df, rows, cols=["doc_id", payload_col], schema=MP4_SAMPLE_SCHEMA)
 
 
 # --------------------------------------------------------------------------
@@ -6984,21 +6800,11 @@ def decode_mp3_meta(df: DataFrame, *, payload_col: str = "payload") -> DataFrame
     walk (VBR-correct duration, exact audio byte span). Audio sample
     decode is NOT claimed — the honest codec boundary."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf[payload_col]):
-                n, rate, dur, ab = parse_mp3_meta(bytes(payload))
-                out.append((doc_id, n, rate, dur, ab))
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "doc_id", "n_frames", "sample_rate", "duration_ms",
-                    "audio_bytes",
-                ],
-            )
+    def rows(doc_id, payload):
+        n, rate, dur, ab = parse_mp3_meta(bytes(payload))
+        yield (doc_id, n, rate, dur, ab)
 
-    return _decode_map(df, run, MP3_META_SCHEMA)
+    return map_rows(df, rows, cols=["doc_id", payload_col], schema=MP3_META_SCHEMA)
 
 
 def plant_mp3_payloads(df: DataFrame) -> DataFrame:
@@ -7010,31 +6816,25 @@ def plant_mp3_payloads(df: DataFrame) -> DataFrame:
     TPE1 'source-{id%7}'); every payload ends in an ID3v1 'TAG'
     trailer."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                n = d % 25 + 10
-                out.append(
-                    (
-                        doc_id,
-                        build_mp3(
-                            n,
-                            rate_index=d % 3,
-                            bitrate_seq=[(d + f) % 14 + 1 for f in range(n)],
-                            padding_seq=[(d + f) % 2 for f in range(n)],
-                            id3v2=build_id3v2_frames(
-                                {"TIT2": f"doc {d}", "TPE1": f"source-{d % 7}"}
-                            )
-                            if d % 4 == 0
-                            else None,
-                        ),
-                    )
+    def rows(doc_id):
+        d = int(doc_id)
+        n = d % 25 + 10
+        yield (
+            doc_id,
+            build_mp3(
+                n,
+                rate_index=d % 3,
+                bitrate_seq=[(d + f) % 14 + 1 for f in range(n)],
+                padding_seq=[(d + f) % 2 for f in range(n)],
+                id3v2=build_id3v2_frames(
+                    {"TIT2": f"doc {d}", "TPE1": f"source-{d % 7}"}
                 )
-            yield pd.DataFrame(out, columns=["doc_id", "payload"])
+                if d % 4 == 0
+                else None,
+            ),
+        )
 
-    return _planted(df, run, "doc_id long, payload binary")
+    return plant_rows(df, rows, cols=["doc_id"], schema="doc_id long, payload binary")
 
 
 def build_id3v2_frames(frames: dict) -> bytes:
@@ -7112,24 +6912,16 @@ def decode_mp3_tags(df: DataFrame, *, payload_col: str = "payload") -> DataFrame
     """binary MP3 → (title, artist, n_text_frames) via the REAL ID3v2
     frame walk. Untagged payloads yield NULL title/artist and 0."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf[payload_col]):
-                tags = parse_id3v2_frames(bytes(payload))
-                out.append(
-                    (
-                        doc_id,
-                        tags.get("TIT2"),
-                        tags.get("TPE1"),
-                        len(tags),
-                    )
-                )
-            yield pd.DataFrame(
-                out, columns=["doc_id", "title", "artist", "n_text_frames"]
-            )
+    def rows(doc_id, payload):
+        tags = parse_id3v2_frames(bytes(payload))
+        yield (
+            doc_id,
+            tags.get("TIT2"),
+            tags.get("TPE1"),
+            len(tags),
+        )
 
-    return _decode_map(df, run, MP3_TAGS_SCHEMA)
+    return map_rows(df, rows, cols=["doc_id", payload_col], schema=MP3_TAGS_SCHEMA)
 
 
 # --------------------------------------------------------------------------
@@ -7303,23 +7095,19 @@ def plant_tiff_payloads(df: DataFrame, *, text_col: str = "text") -> DataFrame:
     true multi-strip reassembly."""
     import numpy as np
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id, text_val in zip(pdf["doc_id"], pdf[text_col]):
-                d = int(doc_id)
-                w, h = d % 45 + 4, d % 29 + 4
-                raw = (text_val or "").encode("utf-8") or b"\0"
-                px = np.resize(np.frombuffer(raw, np.uint8), (h, w, 3))
-                out.append(
-                    (
-                        doc_id,
-                        build_tiff(px, big_endian=d % 2 == 1, rows_per_strip=d % 7 + 3),
-                    )
-                )
-            yield pd.DataFrame(out, columns=["doc_id", "payload"])
+    def rows(doc_id, text_val):
+        d = int(doc_id)
+        w, h = d % 45 + 4, d % 29 + 4
+        raw = (text_val or "").encode("utf-8") or b"\0"
+        px = np.resize(np.frombuffer(raw, np.uint8), (h, w, 3))
+        yield (
+            doc_id,
+            build_tiff(px, big_endian=d % 2 == 1, rows_per_strip=d % 7 + 3),
+        )
 
-    return _planted(df, run, "doc_id long, payload binary")
+    return plant_rows(
+        df, rows, cols=["doc_id", text_col], schema="doc_id long, payload binary"
+    )
 
 
 # --------------------------------------------------------------------------
@@ -7447,22 +7235,17 @@ def plant_webp_payloads(df: DataFrame) -> DataFrame:
     variant rotating by id%3 (VP8L / lossy VP8 / VP8X+VP8L) and the
     alpha bit set on ids %5==0 where the variant can carry it."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                w, h = d % 40 + 5, d % 33 + 5
-                variant = ("VP8L", "VP8", "VP8X")[d % 3]
-                alpha = d % 5 == 0 and variant != "VP8"
-                filler = hashlib.md5(str(d).encode()).digest()
-                out.append(
-                    (doc_id,
-                     build_webp(w, h, variant=variant, alpha=alpha, filler=filler))
-                )
-            yield pd.DataFrame(out, columns=["doc_id", "payload"])
+    def rows(doc_id):
+        d = int(doc_id)
+        w, h = d % 40 + 5, d % 33 + 5
+        variant = ("VP8L", "VP8", "VP8X")[d % 3]
+        alpha = d % 5 == 0 and variant != "VP8"
+        filler = hashlib.md5(str(d).encode()).digest()
+        yield (
+            doc_id, build_webp(w, h, variant=variant, alpha=alpha, filler=filler)
+        )
 
-    return _planted(df, run, "doc_id long, payload binary")
+    return plant_rows(df, rows, cols=["doc_id"], schema="doc_id long, payload binary")
 
 
 WEBP_META_SCHEMA = (
@@ -7474,17 +7257,11 @@ def decode_webp_meta(df: DataFrame, *, payload_col: str = "payload") -> DataFram
     """binary WebP → one metadata row per payload via the real chunk
     walk. Pixel decode is NOT claimed (VP8/VP8L entropy coding)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf[payload_col]):
-                w, h, alpha, variant = parse_webp_meta(bytes(payload))
-                out.append((doc_id, w, h, alpha, variant))
-            yield pd.DataFrame(
-                out, columns=["doc_id", "width", "height", "has_alpha", "variant"]
-            )
+    def rows(doc_id, payload):
+        w, h, alpha, variant = parse_webp_meta(bytes(payload))
+        yield (doc_id, w, h, alpha, variant)
 
-    return _decode_map(df, run, WEBP_META_SCHEMA)
+    return map_rows(df, rows, cols=["doc_id", payload_col], schema=WEBP_META_SCHEMA)
 
 
 # --------------------------------------------------------------------------
@@ -9063,66 +8840,64 @@ def plant_webp_lossless_payloads(df: DataFrame, *, text_col: str = "text") -> Da
     masked-tiled-byte formula regardless of packing."""
     import numpy as np
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id, text_val in zip(pdf["doc_id"], pdf[text_col]):
-                d = int(doc_id)
-                w, h = d % 31 + 4, d % 21 + 4
-                raw = (text_val or "").encode("utf-8") or b"\0"
-                buf = np.frombuffer(raw, np.uint8)
-                if d % 8 == 5:
-                    # r9 LOSSY arm: a real VP8 keyframe + ALPH alpha.
-                    # Uniform-130 RGB is EXACTLY reconstructible
-                    # (Y=U=V=128 -> every MB skips -> BT.601 inverse
-                    # rounds back to 130), and the alpha plane is
-                    # lossless by construction — so px_sum stays
-                    # closed-form: 130*3*w*h + the tiled raw text-byte
-                    # sum. The filter rotates (d>>3)%4 and ids %16==13
-                    # carry the alpha RAW instead of VP8L-coded.
-                    rgb = np.full((h, w, 3), 130, np.uint8)
-                    alpha = np.resize(buf, (h, w))
-                    out.append(
-                        (doc_id,
-                         build_webp_vp8(
-                             rgb, q_index=4, alpha=alpha,
-                             alpha_filter=(d >> 3) % 4,
-                             alpha_raw=d % 16 == 13,
-                         ))
-                    )
-                    continue
-                kw = (
-                    # plain — but ODD plain ids carry meta-prefix
-                    # groups (r8: spatial tree switching; px_sum is
-                    # coding-agnostic so the oracle is unchanged)
-                    {"meta_bits": 2} if d % 2 == 1 else {},
-                    {"predictor_bits": 2},
-                    {"predictor_bits": 3, "predictor_mode": d % 14},
-                    {"color_bits": 2},
-                    # r9: the palette arm also exercises the combined
-                    # forms — subtract-green over the bundled raster
-                    # for odd ids, a predictor stacked on the bundled
-                    # raster for ids %10 == 4
-                    {"palette": True, "sub_green": d % 2 == 1,
-                     **({"predictor_bits": 2} if d % 10 == 4 else {})},
-                )[d % 5]
-                if kw.get("palette"):
-                    buf = buf & 0xC0  # ≤4 values/channel → ≤64 colors
-                px = np.resize(buf, (h, w, 3))
-                out.append(
-                    (doc_id,
-                     build_webp_lossless(
-                         px, cache_bits=6 if d % 2 == 0 else 0,
-                         # r9: every third id encodes backreferences
-                         # with derived near-distance plane codes (the
-                         # decoded pixels — and so the oracle — are
-                         # representation-invariant)
-                         plane_codes=(d % 3 == 0), **kw
-                     ))
-                )
-            yield pd.DataFrame(out, columns=["doc_id", "payload"])
+    def rows(doc_id, text_val):
+        d = int(doc_id)
+        w, h = d % 31 + 4, d % 21 + 4
+        raw = (text_val or "").encode("utf-8") or b"\0"
+        buf = np.frombuffer(raw, np.uint8)
+        if d % 8 == 5:
+            # r9 LOSSY arm: a real VP8 keyframe + ALPH alpha.
+            # Uniform-130 RGB is EXACTLY reconstructible
+            # (Y=U=V=128 -> every MB skips -> BT.601 inverse
+            # rounds back to 130), and the alpha plane is
+            # lossless by construction — so px_sum stays
+            # closed-form: 130*3*w*h + the tiled raw text-byte
+            # sum. The filter rotates (d>>3)%4 and ids %16==13
+            # carry the alpha RAW instead of VP8L-coded.
+            rgb = np.full((h, w, 3), 130, np.uint8)
+            alpha = np.resize(buf, (h, w))
+            yield (
+                doc_id,
+                build_webp_vp8(
+                    rgb, q_index=4, alpha=alpha,
+                    alpha_filter=(d >> 3) % 4,
+                    alpha_raw=d % 16 == 13,
+                ),
+            )
+            return
+        kw = (
+            # plain — but ODD plain ids carry meta-prefix
+            # groups (r8: spatial tree switching; px_sum is
+            # coding-agnostic so the oracle is unchanged)
+            {"meta_bits": 2} if d % 2 == 1 else {},
+            {"predictor_bits": 2},
+            {"predictor_bits": 3, "predictor_mode": d % 14},
+            {"color_bits": 2},
+            # r9: the palette arm also exercises the combined
+            # forms — subtract-green over the bundled raster
+            # for odd ids, a predictor stacked on the bundled
+            # raster for ids %10 == 4
+            {"palette": True, "sub_green": d % 2 == 1,
+             **({"predictor_bits": 2} if d % 10 == 4 else {})},
+        )[d % 5]
+        if kw.get("palette"):
+            buf = buf & 0xC0  # ≤4 values/channel → ≤64 colors
+        px = np.resize(buf, (h, w, 3))
+        yield (
+            doc_id,
+            build_webp_lossless(
+                px, cache_bits=6 if d % 2 == 0 else 0,
+                # r9: every third id encodes backreferences
+                # with derived near-distance plane codes (the
+                # decoded pixels — and so the oracle — are
+                # representation-invariant)
+                plane_codes=(d % 3 == 0), **kw
+            ),
+        )
 
-    return _planted(df, run, "doc_id long, payload binary")
+    return plant_rows(
+        df, rows, cols=["doc_id", text_col], schema="doc_id long, payload binary"
+    )
 
 
 # --------------------------------------------------------------------------
@@ -9320,28 +9095,14 @@ def decode_animation_frames(df: DataFrame, *, payload_col: str = "payload") -> D
     or plant animations)."""
     import numpy as np
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf[payload_col]):
-                cw, ch, _loop, _bg, snaps = parse_webp_animation(
-                    bytes(payload)
-                )
-                for i, (dur, canvas) in enumerate(snaps):
-                    out.append(
-                        (doc_id, i, int(dur), cw, ch,
-                         int(np.asarray(canvas, np.int64).sum()))
-                    )
-            yield pd.DataFrame(
-                out,
-                columns=["doc_id", "frame_idx", "duration_ms", "width",
-                         "height", "px_sum"],
-            )
+    def rows(doc_id, payload):
+        cw, ch, _loop, _bg, snaps = parse_webp_animation(bytes(payload))
+        for i, (dur, canvas) in enumerate(snaps):
+            yield (doc_id, i, int(dur), cw, ch,
+                   int(np.asarray(canvas, np.int64).sum()))
 
-    _anim_schema = (
-        "doc_id long, frame_idx int, duration_ms int, "
-        "width int, height int, px_sum long"
+    return map_rows(
+        df, rows, cols=["doc_id", payload_col],
+        schema="doc_id long, frame_idx int, duration_ms int, "
+        "width int, height int, px_sum long",
     )
-    if getattr(df, "_plant_fusion", None) is not None:
-        return _decode_map(df, run, _anim_schema)
-    return _spread(df).mapInPandas(run, schema=_anim_schema)

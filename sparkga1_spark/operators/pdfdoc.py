@@ -30,12 +30,10 @@ from __future__ import annotations
 
 import re
 import zlib
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 
-from sparkga1_spark.operators.multimodal import _decode_map, _planted
+from sparkga1_spark.operators.transform import map_rows, plant_rows
 
 _MAX_STREAM_BYTES = 1 << 26  # 64 MiB: a Flate bomb refuses
 
@@ -408,15 +406,11 @@ PDF_TEXT_SCHEMA = "doc_id long, n_pages int, pdf_text string"
 def extract_pdf_text_stage(df: DataFrame, *, payload_col: str = "payload") -> DataFrame:
     """binary PDF → (n_pages, extracted text) per document. Map-only."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf[payload_col]):
-                text, n_pages = extract_pdf_text(bytes(payload))
-                out.append((doc_id, n_pages, text))
-            yield pd.DataFrame(out, columns=["doc_id", "n_pages", "pdf_text"])
+    def rows(doc_id, payload):
+        text, n_pages = extract_pdf_text(bytes(payload))
+        yield (doc_id, n_pages, text)
 
-    return _decode_map(df, run, PDF_TEXT_SCHEMA)
+    return map_rows(df, rows, cols=["doc_id", payload_col], schema=PDF_TEXT_SCHEMA)
 
 
 def plant_pdf_payloads(df: DataFrame, *, text_col: str = "text") -> DataFrame:
@@ -424,18 +418,14 @@ def plant_pdf_payloads(df: DataFrame, *, text_col: str = "text") -> DataFrame:
     id%3+1 pages, FlateDecode content streams on odd ids, the text
     round-robin across pages with all three text-showing operator
     forms and an escape-bearing marker line per page."""
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id, text in zip(pdf["doc_id"], pdf[text_col]):
-                d = int(doc_id)
-                out.append(
-                    (
-                        doc_id,
-                        build_pdf(d, text or "", flate=d % 2 == 1,
-                                  n_pages=d % 3 + 1),
-                    )
-                )
-            yield pd.DataFrame(out, columns=["doc_id", "payload"])
+    def rows(doc_id, text):
+        d = int(doc_id)
+        yield (
+            doc_id,
+            build_pdf(d, text or "", flate=d % 2 == 1,
+                      n_pages=d % 3 + 1),
+        )
 
-    return _planted(df, run, "doc_id long, payload binary")
+    return plant_rows(
+        df, rows, cols=["doc_id", text_col], schema="doc_id long, payload binary"
+    )

@@ -1,16 +1,20 @@
-"""Black-box per-group / per-partition transform surface (SURVEY.md
-§2.8, X-1..X-8).
+"""Black-box per-group / per-row / per-partition transform surface
+(SURVEY.md §2.8, X-1..X-8).
 
 The reference's heavy lifting is external processes per region (bwa,
 Picard, GATK — SparkGA1.scala:817-953); the engine's equivalent is the
 Arrow-batched pandas transform family:
 
-- apply_per_group: `applyInPandas` over group keys — the X-2..X-5,X-8
-  shape (region in → region result out). Optionally skew-salted via
-  operators/skew.py so a hot region doesn't serialize on one worker
-  (the reference's Part-2 problem).
-- map_batches: `mapInPandas` over partitions — the X-1 shape (chunk in
-  → many records out, a flatMap-style UDTF).
+- apply_per_group: one `mapInPandas` over a key-hash-repartitioned,
+  sorted input that calls `fn` once per contiguous key run — the
+  X-2..X-5,X-8 shape (region in → region result out). Optionally
+  skew-salted via operators/skew.py so a hot region doesn't serialize
+  on one worker (the reference's Part-2 problem).
+- map_rows / plant_rows: `mapInPandas` driving a plain per-row function
+  — the X-1 shape (`inputData.flatMap(bwaRun)`: one record in → zero or
+  more records out). Every codec, crawl, MIME and PDF stage runs on
+  these two; plant_rows also spreads its input and lets a directly
+  chained map_rows fuse into one Python stage.
 - pipe_partitions: the rdd.pipe analog for true external binaries, kept
   behind one function so the subprocess surface is a single audited
   point.
@@ -22,10 +26,11 @@ relational operator stays JVM-side.
 from __future__ import annotations
 
 import subprocess
-from collections.abc import Callable, Iterator, Sequence
+from collections.abc import Callable, Iterable, Iterator, Sequence
 
 import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql.types import StructType
 
 
 def apply_per_group(
@@ -66,8 +71,8 @@ def apply_per_group(
     stage (837 groups, 0.44 s of fn CPU inside ~17 task-seconds of
     stage time). The same ClusteredDistribution is realized manually:
     hash-repartition on the group keys, sortWithinPartitions so groups
-    arrive contiguous, and ONE mapInPandas whose generator walks key
-    runs with pandas groupby, buffering only the batch-spanning
+    arrive contiguous, and ONE mapInPandas whose generator slices key
+    runs at vectorized run boundaries, buffering only the batch-spanning
     trailing run. fn still sees exactly one group per call (keys
     included, salt dropped — the applyInPandas contract); outputs
     concatenate per input batch so the return path ships a few large
@@ -161,20 +166,78 @@ def apply_per_group(
     )
 
 
-def map_batches(
-    df: DataFrame,
-    *,
-    fn: Callable[[pd.DataFrame], pd.DataFrame],
-    schema: str,
-) -> DataFrame:
-    """X-1 shape: per-partition batch flatMap (`mapInPandas`). `fn` maps
-    one pandas batch to an output frame of any row count."""
+RowFn = Callable[..., Iterable[tuple]]
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+
+def _row_batches(fn: RowFn, cols: Sequence[str], schema: str):
+    """The one batch generator behind map_rows and plant_rows: feed each
+    input row's `cols` values to `fn` and collect every tuple it yields
+    into one output frame per input batch, columns named by `schema`."""
+    names = StructType.fromDDL(schema).fieldNames()
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            yield fn(pdf)
+            out = []
+            for row in zip(*(pdf[c] for c in cols)):
+                out.extend(fn(*row))
+            yield pd.DataFrame(out, columns=names)
 
-    return df.mapInPandas(gen, schema=schema)
+    return run
+
+
+def _spread(df: DataFrame) -> DataFrame:
+    """Repartition a small projection to the session's full parallelism
+    before entering a Python row chain. Codec stages are CPU-bound, not
+    scan-bound: a small table often arrives as ONE scan partition
+    (observed at sf0.1 — the whole plant→decode chain ran as a single
+    task on a 32-core session), and the chain inherits the planter's
+    partitioning because back-to-back mapInPandas stages add no
+    exchange. The shuffle moves only ids + text, negligible against the
+    per-row encode/decode CPU; on a real cluster it also decouples codec
+    parallelism from file layout (a 100 TB corpus may still have skewed
+    or few-but-huge files)."""
+    return df.repartition(df.sparkSession.sparkContext.defaultParallelism)
+
+
+def plant_rows(
+    df: DataFrame, fn: RowFn, *, cols: Sequence[str], schema: str
+) -> DataFrame:
+    """Planter stage: round-robin spread `df`, then map each row through
+    `fn` as in map_rows. The result remembers (df, generator) so that a
+    map_rows call made directly on it FUSES with this stage (r13
+    optimization, guide §4.1 — every chained Python map operator is its
+    own JVM↔Python round trip; measured ~0.15-0.35 s of pure boundary
+    latency per extra hop at 32 tasks even for an identity function).
+    The mark is advisory: any other consumer simply executes the planted
+    frame."""
+    run = _row_batches(fn, cols, schema)
+    out = _spread(df).mapInPandas(run, schema=schema)
+    out._plant_fusion = (df, run)
+    return out
+
+
+def map_rows(
+    df: DataFrame, fn: RowFn, *, cols: Sequence[str], schema: str
+) -> DataFrame:
+    """X-1 shape: per-row flatMap. `fn(*row)` receives the values of
+    `cols` for one input row and yields zero or more output tuples,
+    positional in `schema`'s field order; one `mapInPandas` stage.
+
+    When `df` came straight from plant_rows, the planter's generator is
+    chained into this one inside ONE mapInPandas over the planter's
+    spread input — payload bytes then never cross back through the JVM
+    between plant and map. Result rows are identical either way (the
+    planted frame is a pure pass-through)."""
+    run = _row_batches(fn, cols, schema)
+    fusion = getattr(df, "_plant_fusion", None)
+    if fusion is None:
+        return df.mapInPandas(run, schema=schema)
+    src, prun = fusion
+
+    def chained(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        yield from run(prun(batches))
+
+    return _spread(src).mapInPandas(chained, schema=schema)
 
 
 def pipe_partitions(
@@ -225,7 +288,7 @@ def nfc_normalize(
     character stripping and whitespace collapse stay JVM-side
     (CONTROL_CHAR_CLASS / normalize_whitespace); only the composition
     step, which genuinely needs the Unicode tables, enters Python."""
-    from pyspark.sql.types import StringType, StructField, StructType
+    from pyspark.sql.types import StringType, StructField
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import unicodedata

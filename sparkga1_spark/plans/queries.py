@@ -601,7 +601,7 @@ def p2_skew_detect(spark, sf_dir):
     # (r7 VERDICT #2: the crossJoin(broadcast(agg)) form is a BNL whose
     # build side replicates the weights subtree), NOT avg().over(Window
     # .partitionBy()) — a partition-less window funnels the whole
-    # region table through one task; plan_segments documents the same
+    # region table through one task
     avg = weights.agg(F.avg("n_reads").alias("_avg"))
     seg = F.floor(F.col("n_reads") * 4.0 / F.col("_avg") + 0.5)
     return (
@@ -1358,23 +1358,19 @@ SELECT doc_id, u.i AS word_idx, u.w AS word FROM (
 )
 def x_flatmap_records(spark, sf_dir):
     """X-1's 1→N record-expansion shape via mapInPandas: each document
-    batch flat-maps to one output row per token (the chunk→SAM-records
+    flat-maps to one output row per token (the chunk→SAM-records
     dataflow of bwaRun, SparkGA1.scala:63-217)."""
-    import pandas as pd
-
-    from sparkga1_spark.operators.transform import map_batches
+    from sparkga1_spark.operators.transform import map_rows
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
 
-    def explode_words(pdf: pd.DataFrame) -> pd.DataFrame:
-        rows = []
-        for doc_id, text_val in zip(pdf["doc_id"], pdf["text"]):
-            for i, w in enumerate(text_val.strip().split()):
-                rows.append((doc_id, i + 1, w))
-        return pd.DataFrame(rows, columns=["doc_id", "word_idx", "word"])
+    def explode_words(doc_id, text_val):
+        for i, w in enumerate(text_val.strip().split()):
+            yield (doc_id, i + 1, w)
 
-    return map_batches(
-        docs, fn=explode_words, schema="doc_id long, word_idx int, word string"
+    return map_rows(
+        docs, explode_words, cols=["doc_id", "text"],
+        schema="doc_id long, word_idx int, word string",
     )
 
 
@@ -7292,11 +7288,15 @@ def x_curation_write_audit(spark, sf_dir):
     the partition column) breaks the hash — this gates the sink, not
     just the transform."""
     import os
+    import tempfile
 
     from sparkga1_spark.sources.sinks import write_partitioned_sorted
 
     staged = _curation_staged(spark, sf_dir)
-    out = f"/tmp/sparkga1_curation_write_{os.path.basename(sf_dir.rstrip('/'))}"
+    out = os.path.join(
+        tempfile.gettempdir(),
+        f"sparkga1_curation_write_{os.path.basename(sf_dir.rstrip('/'))}",
+    )
     write_partitioned_sorted(
         staged, out, partition_cols=["split"], sort_cols=["doc_id"]
     )
@@ -8214,9 +8214,21 @@ def x_incremental_dedup_triage(spark, sf_dir):
 _DEDUP_INDEX_CACHE: dict = {}
 
 
-def _standing_dedup_index(spark, sf_dir):
-    import hashlib as _hl
+def _sf_tag(sf_dir: str) -> str:
+    """Short stable key of sf_dir: suffixes the standing dedup index's
+    table names and the crawl-ingest stream's state directories."""
+    import hashlib
 
+    return hashlib.md5(sf_dir.encode()).hexdigest()[:8]
+
+
+def _dedup_index_names(sf_dir: str) -> tuple[str, str]:
+    """(hash table, band table) names of sf_dir's standing dedup index."""
+    tag = _sf_tag(sf_dir)
+    return f"dedup_hash_idx_{tag}", f"dedup_band_idx_{tag}"
+
+
+def _standing_dedup_index(spark, sf_dir):
     from sparkga1_spark.functions.hashing import stable_hash64
     from sparkga1_spark.operators.dedup import minhash_band_keys
     from sparkga1_spark.sources.sinks import write_bucketed_table
@@ -8226,8 +8238,7 @@ def _standing_dedup_index(spark, sf_dir):
         del _DEDUP_INDEX_CACHE[k]
     key = (app, sf_dir)
     if key not in _DEDUP_INDEX_CACHE:
-        tag = _hl.md5(sf_dir.encode()).hexdigest()[:8]
-        hname, bname = f"dedup_hash_idx_{tag}", f"dedup_band_idx_{tag}"
+        hname, bname = _dedup_index_names(sf_dir)
         docs = load_table(spark, sf_dir, "documents")
         corpus = docs.filter(F.col("doc_id") % 3 != 0)
         for name in (hname, bname):
@@ -8346,12 +8357,9 @@ def _crawl_ingest_stream(spark, src_dir: str, admitted_path: str,
     deterministic 4-round unroll its oracle depends on);
     tools/ingest_scale_smoke.py's parallel arm raises it to measure
     per-batch parse parallelism = files-per-batch (r8 VERDICT #7)."""
-    import hashlib as _hl
-
     from sparkga1_spark.operators.crawl import warc_response_payloads
     from sparkga1_spark.streaming.sinks import foreach_batch_dedup_admit
 
-    tag = _hl.md5(sf_dir.encode()).hexdigest()[:8]
     # binaryFile's schema is FIXED by the source (review-caught: deriving
     # it via spark.read triggered a full driver-side directory listing
     # per invocation, duplicating the one the stream itself performs)
@@ -8380,10 +8388,9 @@ def _crawl_ingest_stream(spark, src_dir: str, admitted_path: str,
             .alias("text"),
         )
     )
+    hash_table, band_table = _dedup_index_names(sf_dir)
     sink = foreach_batch_dedup_admit(
-        admitted_path,
-        hash_table=f"dedup_hash_idx_{tag}",
-        band_table=f"dedup_band_idx_{tag}",
+        admitted_path, hash_table=hash_table, band_table=band_table
     )
     q = (
         docs.writeStream.foreachBatch(sink)
@@ -8537,11 +8544,13 @@ def s_crawl_ingest_incremental(spark, sf_dir):
     test_crawl_ingest_stream_checkpoint_recovery (phase 1 drains two
     files, phase 2 restarts on the same checkpoint with four)."""
     import os as _os
+    import tempfile
 
-    base = f"/tmp/sparkga1_stream-{spark.sparkContext.applicationId}"
-    import hashlib as _hl
-
-    tag = _hl.md5(sf_dir.encode()).hexdigest()[:8]
+    base = _os.path.join(
+        tempfile.gettempdir(),
+        f"sparkga1_stream-{spark.sparkContext.applicationId}",
+    )
+    tag = _sf_tag(sf_dir)
     src_dir = f"{base}/{tag}/incoming"
     admitted = f"{base}/{tag}/admitted"
     ckpt = f"{base}/{tag}/ckpt"

@@ -208,10 +208,8 @@ def test_fastq_to_pipeline_end_to_end(spark, sf_dir, tmp_path):
     operator; only the aligner itself is the deterministic stand-in."""
     import gzip
 
-    import pandas as pd
-
     from sparkga1_spark.operators import binning
-    from sparkga1_spark.operators.transform import map_batches
+    from sparkga1_spark.operators.transform import map_rows
     from sparkga1_spark.plans.pipeline import variant_call_stage
     from sparkga1_spark.sources import fixtures
     from sparkga1_spark.sources.catalog import load_table
@@ -232,18 +230,16 @@ def test_fastq_to_pipeline_end_to_end(spark, sf_dir, tmp_path):
     reads = read_fastq_chunks(spark, str(d))
     assert reads.count() == 600
 
-    def toy_align(pdf: pd.DataFrame) -> pd.DataFrame:
+    def toy_align(name):
         # deterministic coordinates from the read id (bwa stand-in)
         import hashlib
 
-        rows = []
-        for name, ln in zip(pdf["read_name"], pdf["read_len"]):
-            h = int(hashlib.md5(name.encode()).hexdigest()[:15], 16)
-            rows.append((name, int(h % 25), int(h % 999_983 + 1), int(h % 61)))
-        return pd.DataFrame(rows, columns=["read_name", "chr_index", "pos", "mapq"])
+        h = int(hashlib.md5(name.encode()).hexdigest()[:15], 16)
+        yield (name, int(h % 25), int(h % 999_983 + 1), int(h % 61))
 
-    aligned = map_batches(
-        reads, fn=toy_align, schema="read_name string, chr_index int, pos int, mapq int"
+    aligned = map_rows(
+        reads, toy_align, cols=["read_name"],
+        schema="read_name string, chr_index int, pos int, mapq int",
     )
     sd = fixtures.sequence_dict(load_table(spark, sf_dir, "nation"))
     binned = binning.bin_by_region(aligned, sd)
@@ -1083,3 +1079,71 @@ def test_apply_per_group_walk_matches_applyinpandas(spark):
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old_batch)
     assert got == want
     assert len(got) == 8  # 4 k-values x 2 subs, null key included
+
+
+def test_map_rows_flatmap_shapes(spark):
+    """map_rows is a per-row flatMap: a row may yield no tuple (1→0) or
+    several (1→N), an empty input maps to an empty output, and tuples
+    are read positionally in the schema's field order — also across
+    Arrow batch boundaries (forced via a 2-row batch size), including
+    batches in which no row yields anything."""
+    from sparkga1_spark.operators.transform import map_rows
+
+    def fan_out(k, tag):
+        for i in range(k):
+            yield (f"{tag}{i}", k)
+
+    schema = "label string, k long"
+    df = spark.createDataFrame(
+        [(0, "a"), (0, "b"), (3, "c"), (1, "d"), (0, "e")], "k long, tag string"
+    )
+    old_batch = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
+    try:
+        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "2")
+        out = map_rows(df.coalesce(1), fan_out, cols=["k", "tag"], schema=schema)
+        got = sorted(map(tuple, out.collect()))
+    finally:
+        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old_batch)
+    assert out.columns == ["label", "k"]
+    assert got == [("c0", 3), ("c1", 3), ("c2", 3), ("d0", 1)]
+
+    empty = spark.createDataFrame([], "k long, tag string")
+    none = map_rows(empty, fan_out, cols=["k", "tag"], schema=schema)
+    assert none.columns == ["label", "k"]
+    assert none.collect() == []
+
+
+def test_plant_rows_fuses_with_map_rows(spark):
+    """A map_rows stage applied directly to a plant_rows output fuses
+    into ONE Python stage over ONE round-robin spread, and returns the
+    same rows as the unfused two-stage chain."""
+    from sparkga1_spark.operators.transform import map_rows, plant_rows
+
+    def plant(doc_id, text):
+        yield (doc_id, text.encode() * 2)
+
+    def decode(doc_id, payload):
+        yield (doc_id, len(payload))
+
+    src = spark.createDataFrame(
+        [(i, "x" * (i % 7)) for i in range(50)], "doc_id long, text string"
+    )
+    planted = plant_rows(
+        src, plant, cols=["doc_id", "text"], schema="doc_id long, payload binary"
+    )
+    out_schema = "doc_id long, n int"
+    fused = map_rows(planted, decode, cols=["doc_id", "payload"], schema=out_schema)
+    # select("*") drops the planter's fusion mark: the unfused chain
+    unfused = map_rows(
+        planted.select("*"), decode, cols=["doc_id", "payload"], schema=out_schema
+    )
+
+    # plans are read before execution: AQE then prints the initial plan once
+    fused_plan = fused._jdf.queryExecution().executedPlan().toString()
+    assert fused_plan.count("MapInPandas") == 1, fused_plan
+    assert fused_plan.count("RoundRobinPartitioning") == 1, fused_plan
+    unfused_plan = unfused._jdf.queryExecution().executedPlan().toString()
+    assert unfused_plan.count("MapInPandas") == 2, unfused_plan
+    assert sorted(map(tuple, fused.collect())) == sorted(
+        map(tuple, unfused.collect())
+    ) == [(i, 2 * (i % 7)) for i in range(50)]

@@ -413,7 +413,7 @@ def test_magic_bytes_detect_no_python_after_planting(spark, sf_dir):
     the ten planters (mapInPandas, r6 s7: BMP/WAV/Y4M/JPEG/AVI/MP4/
     MP3/FLAC/TIFF/WebP); classification adds none. The only exchanges
     allowed are the planters' round-robin codec spreads
-    (multimodal._spread — deliberate CPU parallelism for the Python
+    (transform.plant_rows — deliberate CPU parallelism for the Python
     stages); classification itself must add NO keyed shuffle (no
     hash/range partitioning anywhere in the plan)."""
     plan = _plan(spark, sf_dir, "x_magic_bytes_detect")

@@ -37,7 +37,7 @@ STEAL_MAX = 0.01
 PAIR = ["x_incremental_dedup_bucketed", "s_crawl_ingest_incremental"]
 
 _CHILD = r"""
-import glob, json, os, shutil, sys, time
+import glob, json, os, shutil, sys, tempfile, time
 sys.path.insert(0, %(repo)r)
 import bench
 from sparkga1_spark.plans.registry import all_queries
@@ -72,7 +72,8 @@ for name in %(pair)r:
     }
 app_id = spark.sparkContext.applicationId
 spark.stop()
-shutil.rmtree(f"/tmp/sparkga1_stream-{app_id}", ignore_errors=True)
+shutil.rmtree(os.path.join(tempfile.gettempdir(), f"sparkga1_stream-{app_id}"),
+              ignore_errors=True)
 print("COLDPROBE " + json.dumps(rows))
 """
 
